@@ -137,12 +137,9 @@ object QueriesR3s {
       val base = t(s, d, "orders")
         .select(col("o_orderkey").as("okey"),
           round(col("o_totalprice") * 100, 0).cast(LongType).as("x"))
-      val ci = graft.operators.BootstrapPoisson.udafColumn
-      base.agg(ci(col("okey"), col("x")).as("r"))
-        .select(lit(50L).as("n_resamples"),
-          col("r.mean_full_micro").as("mean_full_micro"),
-          col("r.ci_lo_micro").as("ci_lo_micro"),
-          col("r.ci_hi_micro").as("ci_hi_micro"))
+      graft.operators.BootstrapPoisson.ci(base)
+        .select(lit(50L).as("n_resamples"), col("mean_full_micro"),
+          col("ci_lo_micro"), col("ci_hi_micro"))
     },
     Some("""WITH base AS (
               SELECT o_orderkey AS okey,

@@ -11,6 +11,8 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
+    // dev knob: SPARK_EXTRA_CONF="k=v;k=v" for conf experiments
+    val extra = graft.engine.Engine.harnessExtraConfs("timeq")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val b = SparkSession.builder()
@@ -30,28 +32,12 @@ object TimeQ {
       // 10000 entries restored isolated-best times with other queries
       // interleaved). JVM-static: must be set at builder time.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
-    // dev knob: SPARK_EXTRA_CONF="k=v;k=v" for conf experiments
-    sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => b.config(k, v)
-          case _ => System.err.println(s"[timeq] skipping malformed conf entry '$kv'")
-        }
-      })
+    extra.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // fixture-scale scheduling-floor confs, gated like Bench/Verify;
     // SPARK_EXTRA_CONF keys win for A/B runs
-    // only WELL-FORMED k=v entries count as caller-pinned keys — a
-    // malformed entry was rejected by the builder loop above and must
-    // not suppress the floor conf it never actually set
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir,
-      sys.env.get("SPARK_EXTRA_CONF").toSeq
-        .flatMap(_.split(";"))
-        .flatMap(_.split("=", 2) match {
-          case Array(k, _) => Some(k)
-          case _           => None
-        }).toSet)
+    graft.engine.Engine.fixtureFloorConfs(spark, sfDir, extra.map(_._1).toSet)
 
     @volatile var jobs = 0
     @volatile var stages = 0

@@ -10,6 +10,11 @@ object Verify {
     // the driver always invokes with exactly two args = run everything)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // A/B knob (mirrors Bench/TimeQ): SPARK_EXTRA_CONF="k=v;k=v" — makes
+    // the floor-off correctness A/B first-class (e.g.
+    // SPARK_EXTRA_CONF="spark.graft.floorScope=false" reruns the inventory
+    // under production AQE/partitioning without forked-JVM javaOptions)
+    val extra = graft.engine.Engine.harnessExtraConfs("verify")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -29,22 +34,10 @@ object Verify {
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B knob (mirrors Bench/TimeQ): SPARK_EXTRA_CONF="k=v;k=v" — makes
-    // the floor-off correctness A/B first-class (e.g.
-    // SPARK_EXTRA_CONF="spark.graft.floorScope=false" reruns the inventory
-    // under production AQE/partitioning without forked-JVM javaOptions)
-    val extraKeys = scala.collection.mutable.Set.empty[String]
-    sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v); extraKeys += k
-          case _ => System.err.println(
-            s"[verify] skipping malformed conf entry '$kv'")
-        }
-      })
+    extra.foreach { case (k, v) => spark.conf.set(k, v) }
     // fixture-scale scheduling-floor confs (size- and conf-gated; see
     // Engine.fixtureFloorConfs) — A/B overrides above take precedence
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir, extraKeys.toSet)
+    graft.engine.Engine.fixtureFloorConfs(spark, sfDir, extra.map(_._1).toSet)
     new java.io.File(outDir).mkdirs()
     // shared one-scan-per-table cache pays off across the full inventory;
     // filtered dev runs skip it

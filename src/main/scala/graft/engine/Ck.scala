@@ -40,6 +40,11 @@ object Ck {
 
   val ReliableKey = "spark.graft.reliableCheckpoint"
   val DirKey = "spark.graft.checkpointDir"
+  /** Plan-inspection bypass: every [[cp]] returns its input unchanged.
+    * Set only by `tools.ExplainQ`; the harness mains refuse it
+    * ([[Engine.extraConfs]]).
+    */
+  val BypassKey = "spark.graft.ckptBypassForExplain"
 
   def reliable(df: DataFrame): Boolean =
     df.sparkSession.conf.get(ReliableKey, "false").toBoolean
@@ -63,10 +68,10 @@ object Ck {
     // swaps the plan for a LogicalRDD, so `.explain` on a graded query
     // shows an 8-line scan stub instead of the shape the judge needs to
     // check (the r13-verdict g1 complaint). ExplainQ sets this conf to
-    // explain the FULL lineage; nothing execution-facing sets it —
-    // Bench/Verify/TimeQ/FloorCheck all leave checkpoints on.
-    if (df.sparkSession.conf.get("spark.graft.ckptBypassForExplain",
-        "false").toBoolean) df
+    // explain the FULL lineage; nothing execution-facing may set it — it
+    // would also re-run Pipeline's outputs once per action — so the
+    // harness mains refuse it in SPARK_EXTRA_CONF (Engine.extraConfs).
+    if (df.sparkSession.conf.get(BypassKey, "false").toBoolean) df
     else if (!reliable(df)) df.localCheckpoint(eager)
     else {
       val sc = df.sparkSession.sparkContext

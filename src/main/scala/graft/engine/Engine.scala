@@ -168,6 +168,38 @@ object Engine {
     }
   }
 
+  /** `SPARK_EXTRA_CONF="k=v;k=v"` as the harness mains (Bench, Verify,
+    * TimeQ, tools.TimeQuery, tools.StreamProf) read it: malformed entries
+    * are reported on stderr and skipped. [[Ck.BypassKey]] is refused with
+    * an IllegalArgumentException: it switches every checkpoint off, which
+    * measures or grades a different engine (Pipeline's outputs, for one,
+    * would be recomputed by every action).
+    */
+  def extraConfs(raw: Option[String], tag: String): Seq[(String, String)] = {
+    val kvs = raw.toSeq.flatMap(_.split(";")).filter(_.nonEmpty).flatMap { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => Some(k -> v)
+        case _ =>
+          System.err.println(s"[$tag] skipping malformed conf entry '$kv'")
+          None
+      }
+    }
+    require(!kvs.exists(_._1 == Ck.BypassKey),
+      s"[$tag] refusing SPARK_EXTRA_CONF key ${Ck.BypassKey}: it turns " +
+        "every checkpoint off and is reserved for tools.ExplainQ")
+    kvs
+  }
+
+  /** [[extraConfs]] of the process environment for a harness `main`:
+    * a refused key exits the JVM with status 2 before any session starts.
+    */
+  def harnessExtraConfs(tag: String): Seq[(String, String)] =
+    try extraConfs(sys.env.get("SPARK_EXTRA_CONF"), tag)
+    catch { case e: IllegalArgumentException =>
+      System.err.println(e.getMessage.stripPrefix("requirement failed: "))
+      sys.exit(2)
+    }
+
   /** Session-level twin of [[floorScoped]] for the harness mains (Bench /
     * Verify / TimeQ): applies the fixture-scale scheduling-floor confs
     * ONCE per session — AQE off, 8-partition shuffles — under the same

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** One-pass Poisson-bootstrap kernel (round 14, VERDICT r13 task 6):
@@ -96,14 +97,17 @@ object BootstrapPoisson {
       }
 
       override def finish(r: Buf): CI = {
+        // a 0/0 mean is the former query's NaN cast to 0: an empty
+        // resample bucket (every weight 0), or an empty base, whose row
+        // [[ci]] drops
+        def meanMicro(sum: Long, n: Long): Long =
+          if (n == 0L) 0L else roundToLong(sum.toDouble / n.toDouble * 1e4)
         // per-resample mean_micro, ranked by (mean_micro, b) exactly as
         // the former row_number window ordered by (mean_micro, b)
-        val means = Array.tabulate(Resamples) { b =>
-          (roundToLong(r.sb(b).toDouble / r.nb(b).toDouble * 1e4), b)
-        }
+        val means = Array.tabulate(Resamples)(b => (meanMicro(r.sb(b), r.nb(b)), b))
         java.util.Arrays.sort(means, Ordering.Tuple2[Long, Int])
         CI(
-          roundToLong(r.sx.toDouble / r.n.toDouble * 1e4),
+          meanMicro(r.sx, r.n),
           means(1)._1,   // rk = 2
           means(48)._1)  // rk = 49
       }
@@ -116,4 +120,15 @@ object BootstrapPoisson {
   def udafColumn: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udaf(agg,
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+
+  /** The CI of `base` (BIGINT columns `okey`, `x`) as one row of
+    * `mean_full_micro, ci_lo_micro, ci_hi_micro` — zero rows when `base`
+    * is empty, as the former groupBy(b) query returned (it had no groups).
+    */
+  def ci(base: DataFrame): DataFrame =
+    base.agg(udafColumn(col("okey"), col("x")).as("r"), count(lit(1)).as("n"))
+      .filter(col("n") > 0L)
+      .select(col("r.mean_full_micro").as("mean_full_micro"),
+        col("r.ci_lo_micro").as("ci_lo_micro"),
+        col("r.ci_hi_micro").as("ci_hi_micro"))
 }

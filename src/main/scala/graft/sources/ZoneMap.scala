@@ -73,9 +73,9 @@ object ZoneMap {
     * [[append]] and [[compact]] write, so the two can't drift.
     */
   private def zoneLine(z: Zone): String =
-    Seq(z.file,
+    (Seq(z.file,
       z.minMicros.fold("")(_.toString), z.maxMicros.fold("")(_.toString),
-      z.rows.toString, z.nulls.fold("")(_.toString)).mkString("\t")
+      z.rows.toString) ++ z.nulls.map(_.toString)).mkString("\t")
 
   private def parseZones(p: java.nio.file.Path): Option[Seq[Zone]] = {
     if (!Files.isRegularFile(p)) return None
@@ -228,9 +228,13 @@ object ZoneMap {
 
   /** OPTIMIZE-style compaction: adjacent small files (manifest order by
     * envelope min) are greedily grouped up to `targetRows` and each
-    * group rewritten as ONE key-sorted file. The new manifest line is
-    * pure arithmetic over the group's lines — min of mins, max of maxes,
-    * sums — so compaction costs one read+write per group and ZERO stats
+    * group rewritten as ONE key-sorted file. All multi-file groups are
+    * rewritten by one Spark job: their files are read once, each row is
+    * tagged with its group index (looked up by file name), hash-shuffled
+    * on that index and written `partitionBy` it, so every group lands as
+    * exactly one part file and the groups are written by parallel tasks.
+    * The new manifest line is pure arithmetic over the group's lines —
+    * min of mins, max of maxes, sums — so compaction runs ZERO stats
     * jobs (the Delta OPTIMIZE commit shape: data files change, the log
     * math is exact). Files already at or above target, or with no
     * neighbor to merge with, are left untouched. Returns the number of
@@ -255,40 +259,51 @@ object ZoneMap {
         groups += scala.collection.mutable.ArrayBuffer(z)
       else cur += z
     }
+    // a group's index is its position in envelope order, single-file
+    // groups counted, and names its `part-compacted-<i>-` output
+    val indexed = groups.filter(_.nonEmpty).map(_.toSeq).zipWithIndex.toSeq
+    val merging = indexed.filter(_._1.size > 1)
+    if (merging.isEmpty) return 0
+    val groupOf = merging.flatMap { case (g, i) => g.map(_.file -> i) }.toMap
     val st = stampedSchema(dir)
-    def reader = st.fold(spark.read)(s => spark.read.schema(s))
-    var removed = 0
-    val newManifest = groups.filter(_.nonEmpty).zipWithIndex.map {
-      case (g, _) if g.size == 1 => g.head
-      case (g, i) =>
-        val tmp = Files.createTempDirectory("graft_compact_").toString
-        try {
-          reader.parquet(g.toSeq.map(z => s"$dir/${z.file}"): _*)
-            .coalesce(1).sortWithinPartitions(key)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-          val part = Option(new java.io.File(tmp).listFiles())
-            .flatMap(_.find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")))
-            .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
-          // name carries the pass ordinal: no collision with Spark's
-          // UUID-named parts or an earlier compaction's outputs
-          val name = s"part-compacted-$i-${part.getName.stripPrefix("part-")}"
-          Files.move(part.toPath, Paths.get(dir, name))
-          if (!retain)
-            g.foreach(z => Files.deleteIfExists(Paths.get(dir, z.file)))
-          removed += g.size - 1
-          Zone(name,
-            g.flatMap(_.minMicros).reduceOption(_ min _),
-            g.flatMap(_.maxMicros).reduceOption(_ max _),
-            g.map(_.rows).sum,
-            if (g.forall(_.nulls.isDefined)) Some(g.map(_.nulls.get).sum)
-            else None)
-        } finally deleteRecursive(Paths.get(tmp))
-    }
-    val lines = newManifest.map(zoneLine).sorted
-    Files.write(manifestPath(dir),
-      lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    removed
+    val tmp = Files.createTempDirectory("graft_compact_").toString
+    try {
+      val gcol = "__graft_compact_group"
+      st.fold(spark.read)(s => spark.read.schema(s))
+        .parquet(groupOf.keys.toSeq.sorted.map(f => s"$dir/$f"): _*)
+        .withColumn(gcol, element_at(typedLit(groupOf),
+          substring_index(input_file_name(), "/", -1)))
+        .repartition(merging.size, col(gcol))
+        .sortWithinPartitions(gcol, key)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("maxRecordsPerFile", 0L) // one file per group, always
+        .partitionBy(gcol).parquet(tmp)
+      val written = merging.map { case (g, i) =>
+        val part = Option(new java.io.File(s"$tmp/$gcol=$i").listFiles())
+          .flatMap(_.find(f => f.getName.startsWith("part-") &&
+            f.getName.endsWith(".parquet")))
+          .getOrElse(throw new IllegalStateException(
+            s"no part file for compaction group $i in $tmp"))
+        // name carries the pass ordinal: no collision with Spark's
+        // UUID-named parts or an earlier compaction's outputs
+        val name = s"part-compacted-$i-${part.getName.stripPrefix("part-")}"
+        Files.move(part.toPath, Paths.get(dir, name))
+        i -> Zone(name,
+          g.flatMap(_.minMicros).reduceOption(_ min _),
+          g.flatMap(_.maxMicros).reduceOption(_ max _),
+          g.map(_.rows).sum,
+          if (g.forall(_.nulls.isDefined)) Some(g.map(_.nulls.get).sum)
+          else None)
+      }.toMap
+      val lines = indexed.map { case (g, i) => written.getOrElse(i, g.head) }
+        .map(zoneLine).sorted
+      Files.write(manifestPath(dir),
+        lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      // superseded files go only after the new manifest is written
+      if (!retain)
+        groupOf.keys.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
+      merging.map(_._1.size - 1).sum
+    } finally deleteRecursive(Paths.get(tmp))
   }
 
   private def deleteRecursive(p: java.nio.file.Path): Unit =

@@ -30,7 +30,7 @@ object ExplainQ {
     spark.conf.set("spark.graft.floorScope", "false")
     // full lineage in the explain output: checkpoints otherwise truncate
     // every ckpt-bearing query's plan to a LogicalRDD stub (see Ck.cp)
-    spark.conf.set("spark.graft.ckptBypassForExplain", "true")
+    spark.conf.set(graft.engine.Ck.BypassKey, "true")
     names.foreach { n =>
       println(s"===== $n =====")
       val df = graft.Queries.byName(n).fn(spark, sfDir)

@@ -35,13 +35,8 @@ object StreamProf {
       // a memo hit on rep 2+ would measure parquet readback instead
       .config("spark.graft.streamResultMemo", "false")
       .getOrCreate()
-    sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v)
-          case _           => ()
-        }
-      })
+    graft.engine.Engine.harnessExtraConfs("streamprof")
+      .foreach { case (k, v) => spark.conf.set(k, v) }
     graft.engine.Engine.fixtureFloorConfs(spark, sfDir)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -24,6 +24,7 @@ object TimeQuery {
       if (args(1) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(1).split(",").toSeq
     val n = if (args.length > 2) args(2).toInt else 2
+    val extra = graft.engine.Engine.harnessExtraConfs("timeq")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = SparkSession.builder()
@@ -44,16 +45,9 @@ object TimeQuery {
       // interleaved). JVM-static: must be set at builder time.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
-    val extraKeys = scala.collection.mutable.Set.empty[String]
-    sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v); extraKeys += k
-          case _ => System.err.println(
-            s"[timeq] skipping malformed conf entry '$kv'")
-        }
-      })
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir, extraKeys.toSet)
+    extra.foreach { case (k, v) => spark.conf.set(k, v) }
+    val extraKeys = extra.map(_._1).toSet
+    graft.engine.Engine.fixtureFloorConfs(spark, sfDir, extraKeys)
     // mirror Bench (round 11): graded/bench conditions measure REAL
     // streaming execution, not a memoized-sink readback on rep 2+
     if (!extraKeys.contains("spark.graft.streamResultMemo"))

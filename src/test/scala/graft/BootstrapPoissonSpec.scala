@@ -103,4 +103,24 @@ class BootstrapPoissonSpec extends SparkSpec {
       assert(graft.operators.BootstrapPoisson.weight(k, b) === ref((k, b)),
         s"weight mismatch at okey=$k b=$b")
   }
+
+  test("empty base: zero rows, no throw") {
+    val empty = frame(Nil)
+    assert(graft.operators.BootstrapPoisson.ci(empty).collect().isEmpty)
+    // the bare aggregate still evaluates: every 0/0 mean is 0
+    assert(kernel(empty) === ((0L, 0L, 0L)))
+  }
+
+  test("one row: empty resample buckets rank as mean 0") {
+    val (okey, x) = (7L, 12345L)
+    val weights = (0 until 50).map(graft.operators.BootstrapPoisson.weight(okey, _))
+    assert(weights.contains(0L) && weights.exists(_ > 0L),
+      "the fixture must have both empty and non-empty buckets")
+    // a non-empty bucket's mean is x itself; an empty one is NaN cast to 0
+    val means = weights.map(w => if (w == 0L) 0L else x * 10000L).sorted
+    val got = graft.operators.BootstrapPoisson.ci(frame(Seq(okey -> x))).collect()
+    assert(got.length === 1)
+    assert((got(0).getLong(0), got(0).getLong(1), got(0).getLong(2)) ===
+      ((x * 10000L, means(1), means(48))))
+  }
 }

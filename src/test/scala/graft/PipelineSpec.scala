@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import graft.engine.Ck
 import graft.pipeline.{Pipeline, Schemas}
 import graft.sources.Sources
 
@@ -29,10 +30,21 @@ class PipelineSpec extends SparkSpec {
       .toDF("date", "team", "key_att_out", "key_def_out", "keeper_changed"),
     nameMap = Seq(("The Gunners", "Arsenal")).toDF("raw", "canonical"))
 
-  test("full DAG: ingest → odds → xg → priors → enrich → build → validate") {
-    val rawLeague = Seq(
-      ("17/08/2024", "The Gunners", "Chelsea", "2", "1", 1.8, 3.5, 4.2))
+  /** The full-DAG inputs: every source present. `extraRows` appends
+    * league rows (out of date order, with a tied date, an unparseable
+    * date and a missing odds price) to the one the assertions read.
+    */
+  private def fullInputs(extraRows: Boolean = false): Pipeline.Inputs = {
+    val more = if (!extraRows) Nil else Seq(
+      ("01/09/2024", "Chelsea", "The Gunners", "0", "0", 2.9, 3.2, 2.4),
+      ("10/08/2024", "Arsenal", "Fulham", "3", "0", 1.3, 5.5, 9.0),
+      ("01/09/2024", "Fulham", "Brentford", "1", "2", 2.5, 3.3, 2.8),
+      ("not a date", "Brentford", "Arsenal", "1", "1", 4.0, 3.8, 1.9),
+      ("24/08/2024", "Brentford", "Chelsea", "2", "2", Double.NaN, 3.4, 2.6))
+    val rawLeague = (Seq(
+      ("17/08/2024", "The Gunners", "Chelsea", "2", "1", 1.8, 3.5, 4.2)) ++ more)
       .toDF("Date", "HomeTeam", "AwayTeam", "FTHG", "FTAG", "B365H", "B365D", "B365A")
+      .withColumn("B365H", when(isnan(col("B365H")), lit(null)).otherwise(col("B365H")))
     val oddsJson =
       """[{"home_team":"Arsenal","away_team":"Chelsea",
           "commence_time":"2024-08-24T16:30:00Z",
@@ -44,10 +56,12 @@ class PipelineSpec extends SparkSpec {
       .toDF("team", "league_id", "xg", "xga", "xgd", "xgd90")
     val xgLast = Seq(("Arsenal", 1, "1.9", "1.0", "0.9", "0.3"))
       .toDF("team", "league_id", "xg", "xga", "xgd", "xgd90")
+    Pipeline.Inputs(Seq(rawLeague), Some(oddsJson), manualOdds = None,
+      Some(xgCur), Some(xgLast), dims)
+  }
 
-    val out = Pipeline.run(spark, Pipeline.Inputs(
-      Seq(rawLeague), Some(oddsJson), manualOdds = None,
-      Some(xgCur), Some(xgLast), dims))
+  test("full DAG: ingest → odds → xg → priors → enrich → build → validate") {
+    val out = Pipeline.run(spark, fullInputs())
 
     assert(out.reports.forall(_.ok), s"contract violations: ${out.reports}")
     val h = out.hist.collect()(0)
@@ -100,5 +114,54 @@ class PipelineSpec extends SparkSpec {
     val histLines = Files.readAllLines(Paths.get(s"$dir/HIST_matches.csv"))
     assert(histLines.get(0) == Schemas.histColumns.mkString(","))
     assert(histLines.size == 2)
+  }
+
+  private def rendered(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq
+
+  test("full DAG under reliable checkpoints returns identical rows") {
+    def rows(reliable: Boolean): (Seq[String], Seq[String]) = {
+      spark.conf.set(Ck.ReliableKey, reliable.toString)
+      try {
+        val out = Pipeline.run(spark, fullInputs(extraRows = true))
+        (rendered(out.hist), rendered(out.upcoming))
+      } finally spark.conf.unset(Ck.ReliableKey)
+    }
+    val local = rows(reliable = false)
+    assert(local._1.size == 5 && local._2.size == 1, s"unexpected fixture rows: $local")
+    assert(rows(reliable = true) == local)
+  }
+
+  test("write: the materialized outputs cost one job per table, CSV and parquet") {
+    val dir = Files.createTempDirectory("graft_pipe_jobs_").toString
+    val out = Pipeline.run(spark, fullInputs(extraRows = true))
+    val csvJobs = SparkSpec.jobsIn(spark)(Pipeline.write(out, s"$dir/csv"))
+    val parquetJobs = SparkSpec.jobsIn(spark)(
+      Pipeline.write(out, s"$dir/parquet", parquet = true))
+    assert(csvJobs <= 2, s"CSV sink re-ran the DAG: $csvJobs jobs for 2 tables")
+    assert(parquetJobs <= 2, s"parquet sink re-ran the DAG: $parquetJobs jobs for 2 tables")
+    // the lazy lineage, for contrast, re-runs the sort's sampling per sink
+    val lazyJobs = SparkSpec.jobsIn(spark)(
+      Pipeline.write(Pipeline.build(spark, fullInputs(extraRows = true)), s"$dir/lazy"))
+    assert(lazyJobs > csvJobs, s"lazy $lazyJobs jobs vs materialized $csvJobs")
+  }
+
+  test("write: materialized CSVs are byte-identical to the lazy buildFinal frames") {
+    val dir = Files.createTempDirectory("graft_pipe_bytes_").toString
+    val in = fullInputs(extraRows = true)
+    Pipeline.write(Pipeline.run(spark, in), s"$dir/materialized")
+    Pipeline.write(Pipeline.build(spark, in), s"$dir/lazy")
+    for (f <- Seq("HIST_matches.csv", "UPCOMING_fixtures.csv")) {
+      val got = Files.readAllBytes(Paths.get(s"$dir/materialized/$f"))
+      val want = Files.readAllBytes(Paths.get(s"$dir/lazy/$f"))
+      assert(java.util.Arrays.equals(got, want),
+        s"$f differs:\n${new String(got)}\nvs\n${new String(want)}")
+    }
+    // the fixture exercises what the bytes pin: date order across a tie,
+    // the header, and a null written as an empty field
+    val hist = Files.readAllLines(Paths.get(s"$dir/materialized/HIST_matches.csv"))
+    assert(hist.get(0) == Schemas.histColumns.mkString(","))
+    assert(hist.size == 6)
+    assert(hist.stream().anyMatch(_.contains(",,")))
   }
 }

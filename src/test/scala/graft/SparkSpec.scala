@@ -12,6 +12,38 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+
+  /** Spark jobs started by `body` on this thread. The jobs run under a
+    * unique job group; a one-task fence job in a second group is run
+    * after `body`, and since one listener sees events in order, seeing the
+    * fence's start means every job of `body` has been counted.
+    */
+  def jobsIn(spark: SparkSession)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val fence = s"$group-fence"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup(g: String)(f: => Unit): Unit = {
+        sc.setJobGroup(g, g)
+        try f finally sc.clearJobGroup()
+      }
+      inGroup(group)(body)
+      inGroup(fence)(sc.parallelize(Seq(1), 1).count(): Unit)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(fence) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(fence), "listener never saw the fence job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")

@@ -196,6 +196,89 @@ class ZoneMapSpec extends SparkSpec {
     }
   }
 
+  /** A fresh 24-file `events` lake in a temp dir, removed after `f`. */
+  private def withLake(f: String => Unit): Unit = {
+    val ldir = Files.createTempDirectory("graft_zm_onejob_").toString
+    try {
+      ZoneMap.write(graft.engine.Engine.table(spark, sf, "events"), ldir, "ts", 24)
+      f(ldir)
+    } finally {
+      def rm(p: java.io.File): Unit = {
+        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
+      }
+      rm(new java.io.File(ldir))
+    }
+  }
+
+  private def tableRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect()
+      .map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("compact: one Spark job rewrites every multi-file group, stats exact") {
+    withLake { ldir =>
+      val before = ZoneMap.readManifest(ldir).get
+      val rowsBefore = tableRows(ZoneMap.readPruned(spark, ldir, Long.MinValue, Long.MaxValue))
+      var removed = -1
+      // AQE submits a shuffle's map stage as a job of its own, so the
+      // count is taken without it (as the fixture floor confs run)
+      val aqe = "spark.sql.adaptive.enabled"
+      val aqeWas = spark.conf.get(aqe)
+      spark.conf.set(aqe, "false")
+      val jobs = try SparkSpec.jobsIn(spark) {
+        removed = ZoneMap.compact(spark, ldir, "ts", before.map(_.rows).sum / 5)
+      } finally spark.conf.set(aqe, aqeWas)
+      val after = ZoneMap.readManifest(ldir).get
+      val compacted = after.filter(_.file.startsWith("part-compacted-"))
+      assert(compacted.size >= 3, s"want >= 3 multi-file groups, got $compacted")
+      assert(jobs === 1, s"compaction of ${compacted.size} groups ran $jobs jobs")
+      assert(removed === before.size - after.size)
+      val onDisk = new java.io.File(ldir).listFiles().map(_.getName)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
+      assert(onDisk === after.map(_.file).toSet, "superseded files must be deleted")
+      assert(tableRows(ZoneMap.readPruned(spark, ldir, Long.MinValue, Long.MaxValue)) ===
+        rowsBefore, "compaction changed the table")
+      // each new line equals a fresh per-file stats recompute
+      for (z <- compacted) {
+        val r = spark.read.parquet(s"$ldir/${z.file}")
+          .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
+            count(lit(1)), count(lit(1)) - count(col("ts")))
+          .head()
+        assert(z === ZoneMap.Zone(z.file, Option(r.get(0)).map(_.asInstanceOf[Long]),
+          Option(r.get(1)).map(_.asInstanceOf[Long]), r.getLong(2), Some(r.getLong(3))))
+        val ts = spark.read.parquet(s"$ldir/${z.file}")
+          .select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq
+        assert(ts === ts.sorted, s"${z.file} is not key-sorted")
+      }
+    }
+  }
+
+  test("compact with a committed snapshot keeps superseded files readable") {
+    withLake { ldir =>
+      val v1 = ZoneMap.commit(ldir)
+      val before = ZoneMap.readManifest(ldir).get
+      val rowsV1 = tableRows(ZoneMap.readAtVersion(spark, ldir, v1).get)
+      assert(ZoneMap.compact(spark, ldir, "ts", before.map(_.rows).sum / 5) > 0)
+      assert(before.forall(z => Files.isRegularFile(Paths.get(ldir, z.file))),
+        "a snapshot-referenced file was deleted")
+      assert(tableRows(ZoneMap.readAtVersion(spark, ldir, v1).get) === rowsV1)
+      assert(tableRows(ZoneMap.readPruned(spark, ldir, Long.MinValue, Long.MaxValue)) ===
+        rowsV1)
+    }
+  }
+
+  test("compact keeps a legacy 4-field manifest readable") {
+    withLake { ldir =>
+      val m = Paths.get(ldir, "_zonemap.tsv")
+      Files.write(m, new String(Files.readAllBytes(m)).split("\n")
+        .map(_.split("\t", -1).take(4).mkString("\t")).mkString("\n").getBytes)
+      val total = ZoneMap.readManifest(ldir).get.map(_.rows).sum
+      assert(ZoneMap.compact(spark, ldir, "ts", total / 5) > 0)
+      val after = ZoneMap.readManifest(ldir).getOrElse(fail("manifest unreadable"))
+      assert(after.map(_.rows).sum === total)
+      assert(after.forall(_.nulls.isEmpty), "null counts cannot be invented")
+    }
+  }
+
   test("graded query: s14 result matches the flat-table computation") {
     val got = Queries.byName("s14_compacted_scan").fn(spark, sf)
       .collect().map(_.toSeq).toSeq
