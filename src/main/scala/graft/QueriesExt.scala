@@ -601,14 +601,11 @@ object QueriesExt {
       "so it is NOT hint-broadcast: the join stays a plain shuffle join " +
       "and AQE may still broadcast it at runtime when stats say it fits.",
     (s, d) => {
-      // scheduling-floor discipline: AQE's stage-at-a-time scheduling
-      // gave each of this DAG's exchanges its own job (13 locally) and
-      // re-planned the shared tf subtree per stage; with AQE off the
-      // whole plan runs as one job and ReuseExchange dedups the three
-      // references to the tf aggregate. Restored in finally.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // AQE's stage-at-a-time scheduling gave each of this DAG's
+      // exchanges its own job (13 locally) and re-planned the shared tf
+      // subtree per stage; under the fixture floor (AQE off,
+      // Engine.floorConfs) the whole plan runs as one job and
+      // ReuseExchange dedups the three references to the tf aggregate.
       val docs = t(s, d, "documents")
       val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       val tfBase = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("cnt"))
@@ -635,13 +632,8 @@ object QueriesExt {
         .select(col("doc_id"), col("m.tok").as("tok"),
           col("m.v").as("tfidf"))
         .orderBy("doc_id")
-        // materialize INSIDE the AQE-off scope (the conf only matters at
-        // execution time; a lazily returned frame would execute after
-        // the finally restores AQE) — the hitsInt final-frame pattern
+        // materialized here — the hitsInt final-frame pattern
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH toks AS (
               SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),

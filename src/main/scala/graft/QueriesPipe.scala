@@ -31,14 +31,11 @@ object QueriesPipe {
       "master, J3 injuries, J4 lineups, J2 refs, J6+F8 travel, J7 xg — " +
       "all broadcast joins, zero shuffles on the fact side",
     (s, d) => {
-      // scheduling-floor discipline: with AQE on, every one of the ~12
-      // shuffle/broadcast query stages schedules its own job and AQE's
-      // runtime stage cache misses several alias-twin broadcasts that the
-      // static ReuseExchange rule collapses; AQE-off + materialize-inside
-      // runs the same plan at a third of the jobs (42 → 13 at sf0.1).
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // with AQE on, every one of the ~12 shuffle/broadcast query stages
+      // schedules its own job and AQE's runtime stage cache misses
+      // several alias-twin broadcasts that the static ReuseExchange rule
+      // collapses; under the fixture floor (AQE off, Engine.floorConfs)
+      // the same plan runs at a third of the jobs (42 → 13 at sf0.1).
       val n = t(s, d, "nation")
       val nameMap = n.filter(col("n_nationkey") % 4 === 0)
         .select(col("n_name").as("raw"), lower(col("n_name")).as("canonical"))
@@ -92,9 +89,6 @@ object QueriesPipe {
           col("away_xg"), col("away_xga"), col("away_xgd"), col("away_xgd_per90"))
         .orderBy("cid")
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""
       WITH nmap AS (

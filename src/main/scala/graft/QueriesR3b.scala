@@ -363,12 +363,9 @@ object QueriesR3b {
       // frame feeds the self-join's two sides — materialize each once
       // (same discipline as g3's backbone): without the checkpoints the
       // single lazy plan re-hashes the whole corpus three times.
-      // AQE off for the scope: stage-at-a-time scheduling gave the two
-      // checkpoint actions + verify 13 scheduler jobs; restored in
-      // finally, result materialized inside the scope.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // Under AQE, stage-at-a-time scheduling gave the two checkpoint
+      // actions + verify 13 scheduler jobs; the fixture floor
+      // (Engine.floorConfs) runs them with AQE off.
       // round 13: the shingle-id projection was the query's hottest
       // stage (3.2 s summed executor time at sf0.1) because
       // array_distinct(transform(shingles, tokenId)) is two INTERPRETED
@@ -430,9 +427,6 @@ object QueriesR3b {
             .as("jac"))
         .transform(graft.engine.Ops.reportSort("ida", "idb"))
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH tk AS (SELECT doc_id,
                    CASE WHEN len(string_split(text, ' ')) >= 2

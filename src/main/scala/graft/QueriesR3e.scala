@@ -261,11 +261,8 @@ object QueriesR3e {
     (s, d) => {
       // the hashed token stream feeds FOUR references (raw counts,
       // target counts, the target total, scoring) — one eager checkpoint
-      // hashes the corpus once; AQE off for the scope (stage-at-a-time
-      // scheduling made this 13 scheduler jobs), restored in finally.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // hashes the corpus once (under AQE, stage-at-a-time scheduling
+      // made this 13 scheduler jobs; the fixture floor turns AQE off).
       val toks = t(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           explode(split(col("text"), " ")).as("tok"))
@@ -301,9 +298,6 @@ object QueriesR3e {
         .agg(count(lit(1)).as("n_toks"), sum("lr_micro").as("score_micro"))
         .orderBy("doc_id")
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH toks AS (
               SELECT doc_id, lang,

@@ -34,13 +34,9 @@ object QueriesR3h {
       "float fan-out). All money stays integer cents end to end, so " +
       "per-channel sums are accumulation-order-proof at any scale.",
     (s, d) => {
-      // scheduling-floor discipline: touches/perConv are each referenced
-      // 3x — lazily that re-plans per AQE stage (19 scheduler jobs);
-      // eager checkpoints + AQE off run the whole settle as ~5 jobs.
-      // Materialized inside the scope, restored in finally.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // touches/perConv are each referenced 3x — lazily that re-plans
+      // per AQE stage (19 scheduler jobs); eager checkpoints under the
+      // fixture floor (AQE off) run the whole settle as ~5 jobs.
       val ev = t(s, d, "events")
         .filter(col("event_type").isin("click", "view", "purchase"))
         .select(col("user_id"), col("event_id"), col("event_type"),
@@ -82,9 +78,6 @@ object QueriesR3h {
         .na.fill(0L, Seq("first_cents", "last_cents", "linear_cents"))
         .coalesce(1).sortWithinPartitions("channel")
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH ev AS (
               SELECT user_id, event_id, event_type, epoch_us(ts) AS ep,

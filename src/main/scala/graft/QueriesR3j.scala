@@ -87,9 +87,6 @@ object QueriesR3j {
       "sqrt + one divide over exact BIGINT counts — bit-identical " +
       "trees on both engines.",
     (s, d) => {
-      // scheduling-floor discipline: AQE-off scope + materialize inside,
-      // restored in finally (the usual stage-at-a-time job floor).
-      //
       // Round-13 audit (VERDICT r12 task 6, boundary-rotation member):
       // 3 jobs / 6 stages / 0.79 s local — the jobs are the basket
       // cache fill, the broadcast builds off the CACHED baskets, and
@@ -100,9 +97,6 @@ object QueriesR3j {
       // pair generation itself. Its weak-list membership flips between
       // identical-code runs (r12: 1.21 s driver / 0.27 s same-day) —
       // host rotation, not plan cost.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
       val items = t(s, d, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       // CPU-heavy generator + pair agg: pin the basket exchange to the
@@ -143,9 +137,6 @@ object QueriesR3j {
             .cast(LongType).as("cosine_micro"))
         .orderBy(desc("cab"), col("a"), col("b")).limit(20)
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH items AS (SELECT DISTINCT l_orderkey AS ok,
                                            l_partkey AS pk

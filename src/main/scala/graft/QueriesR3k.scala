@@ -96,13 +96,12 @@ object QueriesR3k {
       "BM25 vocab broadcasts; a shard-by-token shuffle join is the " +
       "fallback for an unbounded vocabulary.",
     (s, d) => {
-      // scheduling-floor discipline (the graph-loop contract): with AQE
-      // on, EVERY exchange materializes as its own stage-at-a-time
-      // scheduler job — this DAG has ~13 exchanges, so the local floor
-      // was 14+ jobs regardless of caching. AQE off runs the whole
+      // with AQE on, EVERY exchange materializes as its own
+      // stage-at-a-time scheduler job — this DAG has ~13 exchanges, so
+      // the local floor was 14+ jobs regardless of caching. The fixture
+      // floor (AQE off, Engine.floorConfs) runs the whole
       // train+classify+confusion plan as ONE job plus one build job per
-      // broadcast. Conf scoping is local-bench discipline (restored in
-      // finally); the plan itself is AQE-safe at cluster scale.
+      // broadcast; the plan itself is AQE-safe at cluster scale.
       //
       // Round-11 floor note (VERDICT r10 task 6, ≤8-stage ask): the
       // remaining 4 jobs / 10 stages are the scale-honest minimum we
@@ -118,9 +117,6 @@ object QueriesR3k {
       // round-11 codegen-cache fix removed this query's in-bench
       // recompile penalty (2.01 s in-bench → 0.68 s, ≈ its isolated
       // best), which is what the 10-stage plan actually costs.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
       // ONE explode pass: per-doc token counts carry lang (functionally
       // dependent on doc_id, so the extra key is free), and every
       // downstream frame — model, constants, scoring — derives from this
@@ -220,15 +216,9 @@ object QueriesR3k {
           struct((-col("score")).as("ns"), col("l"))).as("predicted"))
       // the 25-row confusion matrix sorts in ONE partition — a range-
       // partitioned orderBy would spend a separate sampling job on it.
-      // Materialized INSIDE the scope (stat_levene's discipline): an
-      // un-executed frame would escape the AQE-off block and run with
-      // the session's stage-per-job scheduling after the finally
       pred.groupBy("actual", "predicted").agg(count(lit(1)).as("n_docs"))
         .coalesce(1).sortWithinPartitions("actual", "predicted")
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH toks AS (SELECT doc_id, lang,
                                  unnest(string_split(text, ' ')) AS tok

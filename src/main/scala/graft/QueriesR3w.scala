@@ -205,28 +205,22 @@ object QueriesR3w {
       "a round earlier, so the job count stays at the same floor.",
     (s, d) => {
       import graft.operators.Iterate.checkpointRdd
-      // loop discipline (the hitsInt/connectedComponents contract): AQE
-      // off — stage-at-a-time scheduling makes every exchange its own
-      // job; broadcasts off — each semi-join's broadcast build is its
-      // own job (2/round); parallelism pinned to the ≤2000-row backbone.
+      // loop pins for the peel loop (Iterate.loopConfs): AQE off —
+      // stage-at-a-time scheduling makes every exchange its own job;
+      // broadcasts off — each semi-join's broadcast build is its own job
+      // (2/round); parallelism pinned to the ≤2000-row backbone.
       // Checkpoints go LAZY with the convergence count() as the
       // materializing action: one scheduler job per checkpoint cadence
       // instead of checkpoint + count (26 → ~8 jobs measured).
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      val spWas = s.conf.get("spark.sql.shuffle.partitions")
-      val abWas = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      def undirected(e: DataFrame): DataFrame =
+        e.select(col("a").as("v"), col("b").as("w"))
+          .unionAll(e.select(col("b").as("v"), col("a").as("w")))
+      val core = Engine.withConfs(s)(graft.operators.Iterate.loopConfs(4): _*) {
       // memoized top-2000 backbone (Graph.backbone) — shared across the
       // graph family instead of rebuilt per query
       var edges = Graph.backbone(s, d).select("a", "b")
       var lastCp: DataFrame = null
       var lastN = -1L
-      def undirected(e: DataFrame): DataFrame =
-        e.select(col("a").as("v"), col("b").as("w"))
-          .unionAll(e.select(col("b").as("v"), col("a").as("w")))
       var round = 1
       var converged = false
       while (round <= 6 && !converged) {
@@ -252,14 +246,12 @@ object QueriesR3w {
         if (n == lastN) converged = true else lastN = n
         round += 1
       }
-      undirected(edges).groupBy(col("v").as("node"))
+      edges
+      }
+      // the lazy final aggregation executes under the session's confs
+      undirected(core).groupBy(col("v").as("node"))
         .agg(count(lit(1)).as("core_deg"))
         .orderBy("node")
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        s.conf.set("spark.sql.shuffle.partitions", spWas)
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", abWas)
-      }
     },
     Some {
       // every CTE that later stages reference more than once is

@@ -117,14 +117,10 @@ object QueriesR4j {
       "tasks; this is the distributed-ranking pattern that holds at " +
       "100 TB, where per-flag windows cannot).",
     (s, d) => {
-      // scheduling-floor discipline (the graph-loop contract): AQE's
-      // stage-at-a-time scheduling gave every exchange of this DAG its
-      // own scheduler job (12 locally); off, the whole plan runs as one
-      // job plus a build per broadcast. Restored in finally; the plan is
-      // AQE-safe at cluster scale.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // AQE's stage-at-a-time scheduling gave every exchange of this DAG
+      // its own scheduler job (12 locally); under the fixture floor (AQE
+      // off) the whole plan runs as one job plus a build per broadcast.
+      // The plan is AQE-safe at cluster scale.
       // cents-exact price: ordering/ties/buckets on the integer image of
       // a 2-dp value are exactly the double's (monotone transform)
       val base = t(s, d, "lineitem")
@@ -197,18 +193,12 @@ object QueriesR4j {
       val denY = nD * col("syy").cast("double") -
         col("sy").cast("double") * col("sy").cast("double")
       val rho = num / sqrt(denX * denY)
-      // 3-row output: sort in one partition, skip the range-sample job;
-      // materialized INSIDE the scope (stat_levene's discipline) — an
-      // un-executed frame would escape the AQE-off block and run with
-      // the session's stage-per-job scheduling after the finally
+      // 3-row output: sort in one partition, skip the range-sample job
       agg.select(col("flag"), col("n"),
         round(rho, 6).as("rho"),
         round(rho * sqrt((nD - 2.0) / (lit(1.0) - rho * rho)), 6).as("t_stat"))
         .coalesce(1).sortWithinPartitions("flag")
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH base AS (
               SELECT l_returnflag AS flag, l_quantity AS x,

@@ -220,14 +220,10 @@ object QueriesR4m {
       "argument that makes DBSCAN feasible at all survives the " +
       "distributed version unchanged.",
     (s, d) => {
-      // scheduling-floor discipline: `counts` is referenced three times
-      // (core set, border probe, final report) — lazily that re-plans
-      // the whole grid join per AQE stage (19 scheduler jobs); an eager
-      // checkpoint + AQE off run the classification as ~5 jobs.
-      // Materialized inside the scope, restored in finally.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // `counts` is referenced three times (core set, border probe,
+      // final report) — lazily that re-plans the whole grid join per AQE
+      // stage (19 scheduler jobs); an eager checkpoint under the fixture
+      // floor (AQE off) runs the classification as ~5 jobs.
       val pts = t(s, d, "customer").select(col("c_custkey").as("k"),
         ((col("c_custkey") % 12000) / 100.0 - 60).as("lat"),
         (((col("c_custkey") * 7) % 6000) / 100.0 - 30).as("lon"))
@@ -272,9 +268,6 @@ object QueriesR4m {
             .otherwise(lit("noise")).as("role"))
         .orderBy("custkey")
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH pts AS (
               SELECT c_custkey AS k,

@@ -106,14 +106,10 @@ object QueriesR4q {
       "doubled-rank trick — no interpolation to disagree across " +
       "engines); the F combination is a handful of scalar doubles.",
     (s, d) => {
-      // scheduling-floor discipline: AQE's stage-at-a-time scheduling
-      // turns each exchange into its own scheduler job; off, the eager
+      // AQE's stage-at-a-time scheduling turns each exchange into its
+      // own scheduler job; under the fixture floor (AQE off) the eager
       // checkpoint + final materialization run as a handful of jobs.
-      // Materialized INSIDE the scope (conf matters at execution time),
-      // restored in finally; AQE-safe at cluster scale.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // AQE-safe at cluster scale.
       import org.apache.spark.sql.expressions.Window
       val base = t(s, d, "lineitem")
         .select(col("l_returnflag").as("g"),
@@ -188,9 +184,6 @@ object QueriesR4q {
         .select(col("n"), col("k"),
           round(col("msb") / col("msw"), 6).as("f_stat"))
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH base AS (
               SELECT l_returnflag AS g,

@@ -117,13 +117,9 @@ object QueriesR5e {
       "integer and flip the rank cross-engine. Clamp + sum are exact " +
       "BIGINT cents.",
     (s, d) => {
-      // scheduling-floor discipline (the graph-loop contract): AQE's
-      // stage-at-a-time scheduling gave every exchange its own job (13
-      // locally); off, the plan runs as one job plus a build per
-      // broadcast. Restored in finally; AQE-safe at cluster scale.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // AQE's stage-at-a-time scheduling gave every exchange its own job
+      // (13 locally); under the fixture floor (AQE off) the plan runs as
+      // one job plus a build per broadcast. AQE-safe at cluster scale.
       // cached (round 14; was an eager checkpoint): the (g, cents,
       // bucket) projection feeds the rollup, the boundary-bucket ranking
       // AND the final clamp pass — without it the scan + round/div
@@ -198,14 +194,9 @@ object QueriesR5e {
           col("tn"),
           round(dd("tsum") / dd("tn"), 0).cast(LongType)
             .as("trim_mean_cents"))
-        // 3-row output: sort in one partition, skip the range-sample job;
-        // materialized INSIDE the AQE-off scope (the intermediate eager
-        // checkpoints that used to pin the scope are gone)
+        // 3-row output: sort in one partition, skip the range-sample job
         .coalesce(1).sortWithinPartitions("g")
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH base AS (
               SELECT l_returnflag AS g,

@@ -35,13 +35,9 @@ object QueriesR5f {
       "trees are the compositional forms that fold identically to the " +
       "oracle's list_dot_product.",
     (s, d) => {
-      // scheduling-floor discipline: the broadcast-heavy sweep ran as 12
-      // AQE stage-at-a-time scheduler jobs; off, it's the cache
-      // materialization plus a build per broadcast. Result materialized
-      // inside the scope, conf restored in finally.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // the broadcast-heavy sweep ran as 12 AQE stage-at-a-time
+      // scheduler jobs; under the fixture floor (AQE off) it is the
+      // cache materialization plus a build per broadcast.
       def emb() = t(s, d, "embeddings")
         .select(col("vec_id").as("id"),
           Similarity.quantize(Similarity.toDoubleVec(col("embedding")))
@@ -109,9 +105,6 @@ object QueriesR5f {
             .as("recall_micro"))
         .coalesce(1).sortWithinPartitions("nprobe")
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH e AS (SELECT vec_id AS id,
                        list_transform(embedding::DOUBLE[],

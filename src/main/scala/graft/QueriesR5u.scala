@@ -120,14 +120,10 @@ object QueriesR5u {
       // measured at the site below. Stage floor × 7 ≈ the wall time;
       // no further cut found that doesn't re-serialize the CDF.
       //
-      // scheduling-floor discipline: AQE's stage-at-a-time scheduling
-      // turns each exchange into its own scheduler job; off, the eager
+      // AQE's stage-at-a-time scheduling turns each exchange into its
+      // own scheduler job; under the fixture floor (AQE off) the eager
       // checkpoint + final materialization run as a handful of jobs.
-      // Materialized INSIDE the scope (conf matters at execution time),
-      // restored in finally; AQE-safe at cluster scale.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // AQE-safe at cluster scale.
       // ONE exchange end-to-end: hash(bk) clusters every later key —
       // the (bk, score) value rollup, the per-bucket offset rollup, and
       // the within-bucket cumulative window all reuse it (bk is a
@@ -188,9 +184,6 @@ object QueriesR5u {
         .select(col("score").as("threshold_cents"), col("tp").as("n_pos"),
           col("tn").as("n_neg"), col("ks_micro"))
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH vc AS (
               SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT)
@@ -228,14 +221,10 @@ object QueriesR5u {
       "per-source verdict joins docs back on the span key (keyed " +
       "shuffles end to end).",
     (s, d) => {
-      // scheduling-floor discipline: AQE's stage-at-a-time scheduling
-      // turns each exchange into its own scheduler job; off, the eager
+      // AQE's stage-at-a-time scheduling turns each exchange into its
+      // own scheduler job; under the fixture floor (AQE off) the eager
       // checkpoint + final materialization run as a handful of jobs.
-      // Materialized INSIDE the scope (conf matters at execution time),
-      // restored in finally; AQE-safe at cluster scale.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      // AQE-safe at cluster scale.
       // native tokenization (plans.AlnumTokens, round 13): one
       // compiled byte scan, byte-identical tokens (TokenizeSpec)
       val spans = t(s, d, "documents")
@@ -288,9 +277,6 @@ object QueriesR5u {
             .cast(LongType).as("docs_affected_share_micro"))
         .coalesce(1).sortWithinPartitions("source")
         .ckpt(true)
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
     },
     Some("""WITH toks AS (
               SELECT doc_id, source,

@@ -134,18 +134,24 @@ object QueriesR6a {
     * view_click_join 1.39 → 1.06 s). NEVER use this around
     * watermark-GATED emission — event-time aggregation in Append mode,
     * outer joins — where exactly that batch emits the final results;
-    * those queries keep the default. Session conf, restored in
-    * finally; production always-on streams never replay through this
-    * helper at all.
+    * those queries keep the default, and the helper refuses them: it
+    * throws IllegalArgumentException when `frame`'s plan holds an
+    * Aggregate or a non-inner stream-stream Join. Returns the conf to
+    * pass to [[Engine.withConfs]] with the scaffold confs; production
+    * always-on streams never replay through this helper at all.
     */
-  private def withoutTrailerBatch[T](s: SparkSession)(body: => T): T = {
-    val was = s.conf.getOption(NoDataKey)
-    s.conf.set(NoDataKey, "false")
-    try body
-    finally was match {
-      case Some(v) => s.conf.set(NoDataKey, v)
-      case None    => s.conf.unset(NoDataKey)
+  private[graft] def withoutTrailerBatch(frame: DataFrame): Seq[(String, String)] = {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val gated = frame.queryExecution.analyzed.collectFirst {
+      case _: Aggregate => "an aggregate"
+      case j: Join if j.joinType != Inner && j.left.isStreaming &&
+          j.right.isStreaming => s"a ${j.joinType.sql} stream-stream join"
     }
+    require(gated.isEmpty, s"withoutTrailerBatch: the plan holds " +
+      s"${gated.getOrElse("")}, whose output is emitted by the trailing " +
+      "no-data batch")
+    Seq(NoDataKey -> "false")
   }
 
   /** Ephemeral scratch root for the per-run stream dirs (checkpoint, state
@@ -257,14 +263,13 @@ object QueriesR6a {
     } else s.read.parquet(dir)
   }
 
-  /** Scoped session confs for ONE ephemeral-checkpoint stream run.
+  /** Confs for ONE ephemeral-checkpoint stream run, passed to
+    * [[Engine.withConfs]] around the run:
     *
-    *  - shuffle partitions: the stateful exchanges allocate one state
-    *    store (dir + provider + per-batch commit) PER partition; at
+    *  - shuffle partitions `parts`: the stateful exchanges allocate one
+    *    state store (dir + provider + per-batch commit) PER partition; at
     *    fixture scale 2 beats 8 by ~0.4 s/query (probe in the
-    *    stream_session_state doc). `spark.graft.streamShufflePartitions`
-    *    overrides for cluster-scale state volumes (plain conf — the plan
-    *    shape is identical).
+    *    stream_session_state doc).
     *  - checkpoint-file checksums OFF (round 10): Spark 4.1 wraps every
     *    checkpoint write in ChecksumCheckpointFileManager, which (a)
     *    writes a second .crc file per WAL/state file — measured
@@ -280,22 +285,17 @@ object QueriesR6a {
   private val ConstraintKey = "spark.sql.constraintPropagation.enabled"
   private val CkptMgrKey = "spark.sql.streaming.checkpointFileManagerClass"
 
-  private def streamScaffoldConfs(s: SparkSession, parts: String = "2")
-      : (String, Option[String], Option[String], Option[String]) = {
-    val partsWere = s.conf.get("spark.sql.shuffle.partitions")
-    val ckWas = s.conf.getOption(ChecksumKey)
-    val cpWas = s.conf.getOption(ConstraintKey)
-    val fmWas = s.conf.getOption(CkptMgrKey)
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("spark.graft.streamShufflePartitions", parts))
-    s.conf.set(ChecksumKey, "false")
-    // constraint propagation off for the stream run (round 11): every
-    // MICRO-BATCH re-plans the query, and on the interval-join shapes
-    // constraint inference dominates queryPlanning (probed 330-430 ms
-    // per run on stream_view_click_outer; paired A/B −0.19 s). It only
-    // feeds filter-inference optimizations these small per-batch plans
-    // don't need; batch queries keep the default.
-    s.conf.set(ConstraintKey, "false")
+  private def streamScaffoldConfs(s: SparkSession, parts: Int = 2)
+      : Seq[(String, String)] =
+    Seq("spark.sql.shuffle.partitions" -> parts.toString,
+      ChecksumKey -> "false",
+      // constraint propagation off for the stream run (round 11): every
+      // MICRO-BATCH re-plans the query, and on the interval-join shapes
+      // constraint inference dominates queryPlanning (probed 330-430 ms
+      // per run on stream_view_click_outer; paired A/B −0.19 s). It only
+      // feeds filter-inference optimizations these small per-batch plans
+      // don't need; batch queries keep the default.
+      ConstraintKey -> "false") ++
     // nio checkpoint manager for the per-run LOCAL scratch checkpoints
     // (round 11): the default FileContext manager costs ~45 ms per
     // atomic write (tools/CkptBench — identical on tmpfs, i.e. pure
@@ -306,24 +306,10 @@ object QueriesR6a {
     // driver-local temp dirs), and durable shared-storage checkpoints
     // must keep the default manager. Opt-out:
     // `spark.graft.fastLocalCheckpoints=false`.
-    if (s.sparkContext.isLocal &&
+    (if (s.sparkContext.isLocal &&
         s.conf.get("spark.graft.fastLocalCheckpoints", "true").toBoolean)
-      s.conf.set(CkptMgrKey,
-        "org.apache.spark.sql.graft.NioCheckpointFileManager")
-    (partsWere, ckWas, cpWas, fmWas)
-  }
-
-  private def restoreScaffoldConfs(s: SparkSession,
-      saved: (String, Option[String], Option[String], Option[String])): Unit = {
-    s.conf.set("spark.sql.shuffle.partitions", saved._1)
-    def put(key: String, was: Option[String]): Unit = was match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-    put(ChecksumKey, saved._2)
-    put(ConstraintKey, saved._3)
-    put(CkptMgrKey, saved._4)
-  }
+      Seq(CkptMgrKey -> "org.apache.spark.sql.graft.NioCheckpointFileManager")
+    else Nil)
 
   /** The replayInput memo discipline applied to the OUTPUT side
     * (round 10, VERDICT r9 task 3): each graded streaming query's replay
@@ -340,9 +326,10 @@ object QueriesR6a {
     * dir, state-store population, sink re-write: ~1-2 s per query per
     * pass, ~10 s per extra inventory pass across the 8-query tier).
     *
-    * The key includes the provider class and the stateful-shuffle conf
-    * so a session that flips them (RocksDBStateStoreSpec's parity run)
-    * gets a genuinely fresh execution, and `spark.graft.streamResultMemo
+    * The key includes the provider class, so a session that flips it
+    * (RocksDBStateStoreSpec's parity run) gets a genuinely fresh
+    * execution, and the stateful-shuffle partition count the query's
+    * scaffold runs at (`parts`). `spark.graft.streamResultMemo
     * =false` disables memoization entirely. The memoized dir is
     * re-validated on every hit (≥1 data file) and rebuilt if a tmp
     * cleaner removed it — the replayDirValid discipline.
@@ -361,14 +348,13 @@ object QueriesR6a {
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .exists(f => f.isFile && f.getName.endsWith(".parquet"))
 
-  private def memoStream(s: SparkSession, d: String, name: String)
-                        (build: => String): String = {
+  private def memoStream(s: SparkSession, d: String, name: String,
+                         parts: Int = 2)(build: => String): String = {
     val memoOn = s.conf.get("spark.graft.streamResultMemo", "true").toBoolean
     if (!memoOn) build
     else {
       val provider = s.conf
         .getOption("spark.sql.streaming.stateStore.providerClass").getOrElse("")
-      val parts = s.conf.get("spark.graft.streamShufflePartitions", "2")
       // fold in EVERY table the tier reads, not just events: the
       // stream-static enrich joins customer, and regenerating that
       // fixture alone must not serve a stale memoized sink (ADVICE r11).
@@ -417,14 +403,10 @@ object QueriesR6a {
       // state-store/task floor scales with the partition count; 2 vs 8
       // saved ~0.2 s here). Cluster runs size this to the real key
       // cardinality (it is plain session conf, not plan shape).
-      val scWas = streamScaffoldConfs(s)
-      val sq = graft.streaming.Streaming.upsertStream(stream, statePath, ckpt,
-        trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      try {
-        sq.awaitTermination()
-      } finally {
-        stopRelease(sq, s)
-        restoreScaffoldConfs(s, scWas)
+      Engine.withConfs(s)(streamScaffoldConfs(s): _*) {
+        val sq = graft.streaming.Streaming.upsertStream(stream, statePath, ckpt,
+          trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+        try sq.awaitTermination() finally stopRelease(sq, s)
       }
       // lazy read of the state table; the dir is swept at JVM exit (see
       // deferDelete — one materialization job per query cheaper than the
@@ -506,7 +488,7 @@ object QueriesR6a {
       "4.1.2 bytecode), so a session ending exactly ON the watermark " +
       "is emitted.",
     (s, d) => {
-      val memoDir = memoStream(s, d, "stream_session_state") {
+      val memoDir = memoStream(s, d, "stream_session_state", parts = 4) {
       val in = replayInput(s, d)
       val base = scratchDir(s, "graft_session_state_")
       val out = s"$base/out"
@@ -548,18 +530,17 @@ object QueriesR6a {
       //    session ever emits). Structural, not scaffold.
       //  - partitions 4 vs 2 re-validated round 12 on this host: paired
       //    delta −0.07 s for 4. Stays at 4.
-      val scWas = streamScaffoldConfs(s, parts = "4")
       // Trigger.AvailableNow (round 9): processes everything available,
       // runs the trailing no-data batch that the advanced watermark
       // needs for Append-mode eviction (the oracle stays bit-green —
       // proof the closed sessions still emit), then self-terminates —
       // no processAllAvailable poll handshake, no explicit stop path
-      try {
+      Engine.withConfs(s)(streamScaffoldConfs(s, parts = 4): _*) {
         runStreamToParquet(s,
           graft.streaming.Streaming.sessionWindowAgg(stream)
           .withColumnRenamed("total_value", "cents")
           , out, ckpt)
-      } finally restoreScaffoldConfs(s, scWas)
+      }
       deferDelete(base)
       out
       }
@@ -637,19 +618,16 @@ object QueriesR6a {
       // commit floor quadruples (probe: ~2 s of commit per batch at 8
       // partitions, ~250 ms at 2):
       // the join buffers both sides in per-partition state stores
-      val scWas = streamScaffoldConfs(s)
-      try {
-        // no-output trailer batch dropped (withoutTrailerBatch doc):
-        // INNER interval joins emit on match, in the data batch
-        withoutTrailerBatch(s) {
-          runStreamToParquet(s,
-            graft.streaming.Streaming
-              .clickAfterViewJoin(vs, cs, windowMs = 240L * 60 * 1000)
-              .select(col("v_user").as("user_id"), col("view_id"),
-                col("view_ts"), col("click_id"), col("click_ts")),
-            out, ckpt)
-        }
-      } finally restoreScaffoldConfs(s, scWas)
+      val joined = graft.streaming.Streaming
+        .clickAfterViewJoin(vs, cs, windowMs = 240L * 60 * 1000)
+        .select(col("v_user").as("user_id"), col("view_id"),
+          col("view_ts"), col("click_id"), col("click_ts"))
+      // no-output trailer batch dropped (withoutTrailerBatch doc):
+      // INNER interval joins emit on match, in the data batch
+      Engine.withConfs(s)(
+          streamScaffoldConfs(s) ++ withoutTrailerBatch(joined): _*) {
+        runStreamToParquet(s, joined, out, ckpt)
+      }
       deferDelete(base)
       out
       }
@@ -690,35 +668,26 @@ object QueriesR6a {
       val base = scratchDir(s, "graft_tws_")
       val out = s"$base/out"
       val ckpt = s"$base/ckpt"
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val provWas = s.conf.getOption(provKey)
-      val scWas = streamScaffoldConfs(s)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val stream = graft.streaming.Streaming.readEventsStream(s, in)
-        .as[graft.streaming.Streaming.Event]
-      val statsFrame = graft.streaming.Streaming.runningUserStats(stream)
-        .toDF()
-      val sq = statsFrame
-        .writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out); ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        sq.awaitTermination()
-      } finally {
-        stopRelease(sq, s)
-        restoreScaffoldConfs(s, scWas)
-        provWas match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None    => s.conf.unset(provKey)
-        }
+      val schema = Engine.withConfs(s)(streamScaffoldConfs(s) :+
+          ("spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"): _*) {
+        val stream = graft.streaming.Streaming.readEventsStream(s, in)
+          .as[graft.streaming.Streaming.Event]
+        val statsFrame = graft.streaming.Streaming.runningUserStats(stream)
+          .toDF()
+        val sq = statsFrame
+          .writeStream
+          .foreachBatch { (b: DataFrame, _: Long) =>
+            b.write.mode("append").parquet(out); ()
+          }
+          .option("checkpointLocation", ckpt)
+          .outputMode("update")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        try sq.awaitTermination() finally stopRelease(sq, s)
+        statsFrame.schema
       }
-      writeSinkSchema(out, statsFrame.schema)
+      writeSinkSchema(out, schema)
       deferDelete(base)
       out
       }
@@ -755,19 +724,18 @@ object QueriesR6a {
       val base = scratchDir(s, "graft_sdim_")
       val out = s"$base/out"
       val ckpt = s"$base/ckpt"
-      // stateless (no exchange to pin), but the checksum-off half of the
-      // scaffold confs still applies to this query's WAL writes
-      val scWas = streamScaffoldConfs(s)
       val stream = graft.streaming.Streaming.readEventsStream(s, in)
         .select(col("event_id"), col("ts"), col("user_id"),
           round(col("value") * 100, 0).cast(LongType).as("value_cents"))
-      try {
+      // stateless (no exchange to pin), but the checksum-off half of the
+      // scaffold confs still applies to this query's WAL writes
+      Engine.withConfs(s)(streamScaffoldConfs(s): _*) {
         runStreamToParquet(s,
           graft.streaming.Streaming.enrichStream(stream, dim)
             .select("event_id", "ts", "user_id", "user_name",
               "nation_key", "value_cents"),
           out, ckpt)
-      } finally restoreScaffoldConfs(s, scWas)
+      }
       deferDelete(base)
       out
       }
@@ -809,13 +777,12 @@ object QueriesR6a {
       val stream = graft.streaming.Streaming.readEventsStream(s, in)
         .select(col("ts"), col("event_type"),
           round(col("value") * 100, 0).cast(LongType).as("value"))
-      val scWas = streamScaffoldConfs(s)
-      try {
+      Engine.withConfs(s)(streamScaffoldConfs(s): _*) {
         runStreamToParquet(s,
           graft.streaming.Streaming.hourlyWindowAgg(stream, "2 hours")
           .withColumnRenamed("sum_value", "cents")
           , out, ckpt)
-      } finally restoreScaffoldConfs(s, scWas)
+      }
       deferDelete(base)
       out
       }
@@ -870,17 +837,14 @@ object QueriesR6a {
             col("event_type"),
             round(col("value") * 100, 0).cast(LongType).as("value_cents"))
       val doubled = delivery().unionAll(delivery())
-      val scWas = streamScaffoldConfs(s)
-      try {
-        // no-output trailer batch dropped (withoutTrailerBatch doc):
-        // within-watermark dedup emits first arrivals in the data batch
-        withoutTrailerBatch(s) {
-          runStreamToParquet(s,
-            graft.streaming.Streaming
-            .dedupStream(doubled, Seq("event_id"))
-            , out, ckpt)
-        }
-      } finally restoreScaffoldConfs(s, scWas)
+      val deduped = graft.streaming.Streaming
+        .dedupStream(doubled, Seq("event_id"))
+      // no-output trailer batch dropped (withoutTrailerBatch doc):
+      // within-watermark dedup emits first arrivals in the data batch
+      Engine.withConfs(s)(
+          streamScaffoldConfs(s) ++ withoutTrailerBatch(deduped): _*) {
+        runStreamToParquet(s, deduped, out, ckpt)
+      }
       deferDelete(base)
       out
       }
@@ -928,8 +892,7 @@ object QueriesR6a {
         graft.streaming.Streaming
           .readEventsStream(s, replayInputTyped(s, d, Some(tpe)))
           .select("event_id", "ts", "user_id")
-      val scWas = streamScaffoldConfs(s)
-      try {
+      Engine.withConfs(s)(streamScaffoldConfs(s): _*) {
         runStreamToParquet(s,
           graft.streaming.Streaming
             .clickAfterViewJoin(side("view"), side("click"),
@@ -937,7 +900,7 @@ object QueriesR6a {
             .select(col("v_user").as("user_id"), col("view_id"),
               col("view_ts"), col("click_id"), col("click_ts")),
           out, ckpt)
-      } finally restoreScaffoldConfs(s, scWas)
+      }
       deferDelete(base)
       out
       }

@@ -20,18 +20,17 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * Entries are the RAW query fns. The fixture-scale scheduling-floor
-    * confs (AQE off, 8-partition shuffles) are applied ONCE per session
+    * confs (AQE off, 6-partition shuffles) are applied ONCE per session
     * by the harness mains via [[graft.engine.Engine.fixtureFloorConfs]] —
     * the end state of round 6-7's floor work: an allowlist of
-    * [[graft.engine.Engine.floorScoped]]-wrapped queries grew through
-    * four TimeQ sweeps (49 → 58 → 77 names, each finding the same
-    * jobs≫stages storm signature deeper in the bench tail), a
-    * full-inventory A/B showed the remaining ~275 queries win another
-    * ~30 s collectively with zero regressions, and the session-level
-    * form then beat wrap-everything by skipping 353 per-query eager
-    * checkpoints (~10 s/pass). Both forms share the size and conf gates,
-    * so production-scale reads keep the native AQE plan with its
-    * skew/coalesce safety nets.
+    * per-query floor-scoped queries grew through four TimeQ sweeps
+    * (49 → 58 → 77 names, each finding the same jobs≫stages storm
+    * signature deeper in the bench tail), a full-inventory A/B showed
+    * the remaining ~275 queries win another ~30 s collectively with zero
+    * regressions, and the session-level form then beat wrap-everything
+    * by skipping 353 per-query eager checkpoints (~10 s/pass). The
+    * session confs are size- and conf-gated, so production-scale reads
+    * keep the native AQE plan with its skew/coalesce safety nets.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Queries.all.map(q => q.name -> q.fn).toMap

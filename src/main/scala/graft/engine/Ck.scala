@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 
 /** Checkpoint-mode switch: every plan-truncation site in the engine
   * (iterative loops in Graph/Dedup/TextAnalysis, query-level reuse
-  * materializations, the fixture floor scope) routes through [[cp]], and
+  * materializations) routes through [[cp]], and
   * ONE conf — `spark.graft.reliableCheckpoint` — flips them all from
   * executor-local checkpoints to reliable `Dataset.checkpoint`.
   *

@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * of Spark's default 200; on a real cluster AQE coalesces/splits post-
   * shuffle partitions at runtime, so the static setting only seeds the
   * initial plan. AQE is on everywhere (skew-join splitting + partition
-  * coalescing are the 100-TB safety nets).
+  * coalescing are the 100-TB safety nets). Two places still turn it off:
+  * the fixture floor below 1 GB ([[floorConfs]]) and the iterative loop
+  * pins ([[withConfs]] in Dedup/Graph/g6_kcore).
   */
 object Engine {
 
@@ -81,6 +83,7 @@ object Engine {
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
+    // left set, not scoped: the returned lazy scan reads with it at execution
     if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = schemaCache.getOrElseUpdate((sfDir, name),
       spark.read.parquet(path).schema)
@@ -120,54 +123,6 @@ object Engine {
   private val schemaCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), org.apache.spark.sql.types.StructType]
 
-  /** Scheduling-floor scope — the stat_levene discipline, shared.
-    *
-    * AQE schedules stage-at-a-time: every exchange materializes as its own
-    * scheduler job, each costing a fixed ~0.1-0.2 s of local job-submission
-    * floor. On fixture-sized inputs the runtime re-planning that buys
-    * (skew splits, size-based join switches) can never trigger — the
-    * shuffles are KB-scale — so queries whose cost is measured to be
-    * AQE-job floor run their plan with AQE off and MATERIALIZE inside the
-    * scope (eager localCheckpoint; the conf is read at execution time, so
-    * an un-materialized frame would escape the scope and execute with the
-    * session's AQE after the finally). Two gates keep the 100 TB posture:
-    *   - size: the scope only engages when the source dir is under 1 GB
-    *     (same idiom as [[table]]'s fixture repartition) — a production
-    *     read never qualifies, so AQE's skew-join and coalescing safety
-    *     nets stay on exactly where they matter;
-    *   - conf: `spark.graft.floorScope=false` disables it outright
-    *     (cluster deployments and the plan-shape specs, which assert the
-    *     INNER plan rather than the checkpoint scan).
-    * Values are unaffected: the checkpoint pins the same rows the lazy
-    * frame would produce, and partition order (e.g. a trailing orderBy)
-    * survives materialization — stream_cdc_state has graded through this
-    * exact shape since round 6.
-    */
-  def floorScoped(s: SparkSession, sfDir: String)(body: => DataFrame): DataFrame = {
-    val enabled = s.conf.get("spark.graft.floorScope", "true").toBoolean
-    if (!enabled || dirBytes(sfDir) >= (1L << 30)) body
-    else {
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      val partsWere = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      // fixture-sized shuffles: 6 partitions right-sizes the per-stage
-      // task count the same way AQE's coalesce would (which the scope
-      // turns off) — a full-inventory A/B at sf0.1 showed 32-partition
-      // stages are ~30% task-scheduling floor on this set, and the
-      // round-14 sweep mapped the remaining curve: full-bench totals
-      // 128.1 s (2) / 103.0 s (4) / 101.3 s (6) / 107.5 s (8) — 6 is
-      // the knee (2 serializes the CPU-dense banded/pair stages, 8+
-      // pays pure task floor). Size-gated like the AQE scope:
-      // production reads never engage it.
-      s.conf.set("spark.sql.shuffle.partitions", "6")
-      try Ck.cp(body, eager = true)
-      finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        s.conf.set("spark.sql.shuffle.partitions", partsWere)
-      }
-    }
-  }
-
   /** `SPARK_EXTRA_CONF="k=v;k=v"` as the harness mains (Bench, Verify,
     * TimeQ, tools.TimeQuery, tools.StreamProf) read it: malformed entries
     * are reported on stderr and skipped. [[Ck.BypassKey]] is refused with
@@ -200,55 +155,91 @@ object Engine {
       sys.exit(2)
     }
 
-  /** Session-level twin of [[floorScoped]] for the harness mains (Bench /
-    * Verify / TimeQ): applies the fixture-scale scheduling-floor confs
-    * ONCE per session — AQE off, 8-partition shuffles — under the same
-    * size and conf gates. Versus wrapping every query in [[floorScoped]],
-    * this skips the per-query eager checkpoint (353 extra
-    * materializations per inventory pass, ~10 s at sf0.1) and keeps
-    * executed plans exactly what a user running those session confs
-    * would get. Production-scale dirs (or floorScope=false) leave the
-    * session untouched; `skip` lets a harness exempt keys its caller
-    * already pinned (e.g. SPARK_EXTRA_CONF A/B overrides).
+  /** Runs `body` with `confs` set on the session, and puts every key
+    * back in `finally`: the old value if the key was set before, unset if
+    * it was not. This is the one scope through which query and operator
+    * code changes confs. "Set before" means explicitly set (present in
+    * `conf.getAll`): `getOption` also answers with a registered key's
+    * default, and writing that default back would leave a key set that
+    * was never set. Confs are session-global, so scoped code is not safe
+    * to run concurrently with other queries on one session.
     */
-  def fixtureFloorConfs(s: SparkSession, sfDir: String,
-                        skip: Set[String] = Set.empty): Unit = {
-    val enabled = s.conf.get("spark.graft.floorScope", "true").toBoolean
-    if (enabled && dirBytes(sfDir) < (1L << 30)) {
-      if (!skip.contains("spark.sql.adaptive.enabled"))
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-      if (!skip.contains("spark.sql.shuffle.partitions"))
-        s.conf.set("spark.sql.shuffle.partitions", "6")
-      // the fixture-scale table cache ([[persistTables]]) is read by
-      // nearly every stage of every query; column compression buys
-      // nothing at <1 GB of heap-resident data and its decode tax is
-      // paid per cached read (round-14 full-bench A/B: 118.8 → 107.5 s
-      // from this conf alone). Production caches — memory-constrained,
-      // size-gated out of this branch — keep the compressed default.
-      if (!skip.contains("spark.sql.inMemoryColumnarStorage.compressed"))
-        s.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
+  def withConfs[T](s: SparkSession)(confs: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll
+    val was = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally was.reverse.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
     }
   }
 
+  /** Shuffle partitions at the fixture scheduling floor. Fixture-sized
+    * shuffles are KB-scale, so this right-sizes the per-stage task count
+    * the way AQE's coalescing would: the round-14 full-bench sweep at
+    * sf0.1 measured 128.1 s (2) / 103.0 s (4) / 101.3 s (6) / 107.5 s
+    * (8) — 2 serializes the CPU-dense banded/pair stages, 8+ pays pure
+    * task floor.
+    */
+  val FloorParts = 6
+
+  /** The fixture gate of [[fixtureFloorConfs]] and [[computeParts]]: the
+    * source dir is under 1 GB (the idiom of [[table]]'s fixture
+    * repartition) and `spark.graft.floorScope` is not `false` (cluster
+    * deployments, plan-shape probes, FloorCheck's floor-off mode).
+    */
+  private def underFloorGate(s: SparkSession, sfDir: String): Boolean =
+    s.conf.get("spark.graft.floorScope", "true").toBoolean &&
+      dirBytes(sfDir) < (1L << 30)
+
+  /** The fixture-scale scheduling-floor confs for `sfDir`, empty over the
+    * gate:
+    *   - AQE off: AQE schedules stage-at-a-time, so every exchange is
+    *     its own scheduler job (~0.1-0.2 s of local job floor each),
+    *     and on KB-scale shuffles its runtime re-planning (skew splits,
+    *     join switches) can never trigger;
+    *   - [[FloorParts]] shuffle partitions;
+    *   - uncompressed table cache: the [[persistTables]] cache is read
+    *     by nearly every stage of every query; column compression buys
+    *     nothing at <1 GB of heap-resident data and its decode tax is
+    *     paid per cached read (round-14 full-bench A/B: 118.8 → 107.5 s
+    *     from this conf alone).
+    * Production-scale dirs keep AQE's skew-join and coalescing safety
+    * nets and the compressed cache.
+    */
+  private[graft] def floorConfs(s: SparkSession, sfDir: String): Seq[(String, String)] =
+    if (!underFloorGate(s, sfDir)) Nil
+    else Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> FloorParts.toString,
+      "spark.sql.inMemoryColumnarStorage.compressed" -> "false")
+
+  /** Applies [[floorConfs]] ONCE per session for the harness mains (Bench
+    * / Verify / TimeQ). Executed plans stay exactly what a user running
+    * those session confs would get. `skip` lets a harness exempt keys its
+    * caller already pinned (e.g. SPARK_EXTRA_CONF A/B overrides).
+    */
+  def fixtureFloorConfs(s: SparkSession, sfDir: String,
+                        skip: Set[String] = Set.empty): Unit =
+    floorConfs(s, sfDir).foreach { case (k, v) =>
+      if (!skip.contains(k)) s.conf.set(k, v)
+    }
+
   /** Parallelism for CPU-DENSE pinned exchanges (round 14). The fixture
-    * floor conf right-sizes the 300+ shuffle/floor-bound queries at 6
-    * partitions, but stages doing real per-row compute (banded rank
+    * floor right-sizes the 300+ shuffle/floor-bound queries at
+    * [[FloorParts]], but stages doing real per-row compute (banded rank
     * windows, in-basket pair generation) leave cores idle at the floor:
     * a 6/12/24-way A/B on the banded stat family measured 12 as the
     * knee at 32 local cores (stat_levene 1.13 → 0.83 s, ml_ks 0.94 →
-    * 0.67, stat_spearman 0.82 → 0.60; 24 ≈ 12). So: 2× the session
-    * floor, bounded by local cores — at 8 cores that folds back to 8,
-    * the value these sites ran at through round 13. Over the size gate
-    * (production inputs) it is the plain session setting: cluster plans
-    * keep user/AQE-controlled parallelism untouched.
+    * 0.67, stat_spearman 0.82 → 0.60; 24 ≈ 12). So, under the fixture
+    * gate: 2× the floor, bounded by local cores but never below the
+    * floor. Over the gate (production inputs) it is the plain session
+    * setting: cluster plans keep user/AQE-controlled parallelism.
     */
-  def computeParts(s: SparkSession, sfDir: String): Int = {
-    val conf = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val enabled = s.conf.get("spark.graft.floorScope", "true").toBoolean
-    if (enabled && dirBytes(sfDir) < (1L << 30))
-      math.max(conf, math.min(2 * conf, s.sparkContext.defaultParallelism))
-    else conf
-  }
+  def computeParts(s: SparkSession, sfDir: String): Int =
+    if (underFloorGate(s, sfDir))
+      math.max(FloorParts, math.min(2 * FloorParts, s.sparkContext.defaultParallelism))
+    else s.conf.get("spark.sql.shuffle.partitions").toInt
 
   private def dirBytes(sfDir: String): Long =
     dirBytesCache.getOrElseUpdate(sfDir, {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.engine.Ck.Ops
+import graft.engine.Engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -167,35 +168,12 @@ object Dedup {
     // Spark 4.1's Union constraint rewrite crashes (AttributeMap key not
     // found). Constraints would only add inferred IsNotNull filters here —
     // ids/labels are never null by construction — so nothing is lost.
-    // NOTE: the toggle is session-global, so this operator is not safe to
-    // run concurrently with other queries on the SAME SparkSession (their
-    // plans would lose inferred-filter constraints for the loop's
-    // duration, and two overlapping calls race on the restore).
+    // Loop pins (Iterate.loopConfs): measured 38 jobs on er_name_cluster
+    // with AQE vs 16 without at identical results; the loop's frames are
+    // uniformly hash-keyed, so AQE contributes nothing here.
     val spark = nodes.sparkSession
-    val ccKey = "spark.sql.constraintPropagation.enabled"
-    val ccPrev = spark.conf.getOption(ccKey)
-    spark.conf.set(ccKey, "false")
-    // AQE off + pinned parallelism for the loop (the hitsInt discipline):
-    // AQE's stage-at-a-time scheduling turns every exchange of every
-    // round into its own scheduler job — measured 38 jobs on
-    // er_name_cluster with AQE vs 16 without at identical results — and
-    // contributes nothing here since the loop's frames are uniformly
-    // hash-keyed. Restored in the finally; queries run sequentially.
     val np = if (parts > 0) parts
              else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = spark.conf.get(aqeKey, "true")
-    val spKey = "spark.sql.shuffle.partitions"
-    val spWas = spark.conf.get(spKey)
-    // broadcasts off too: each BroadcastExchange build is its own driver
-    // job (2 per round), and broadcasting the per-NODE label table is
-    // exactly what a 100 TB run must not do — shuffle joins on the pinned
-    // partitioning are the honest plan at every scale
-    val abKey = "spark.sql.autoBroadcastJoinThreshold"
-    val abWas = spark.conf.get(abKey)
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(spKey, np.toString)
-    spark.conf.set(abKey, "-1")
     // each round's checkpoint blocks are freed eagerly via the underlying
     // RDD (see Iterate.checkpointRdd for why Dataset.unpersist can't)
     import Iterate.checkpointRdd
@@ -203,7 +181,9 @@ object Dedup {
     // an empty nodes frame converges to an empty result instead of NPE
     def labelSum(df: DataFrame): Long =
       df.agg(coalesce(sum("label"), lit(0L))).head().getLong(0)
-    try {
+    Engine.withConfs(spark)(
+        ("spark.sql.constraintPropagation.enabled" -> "false") +:
+          Iterate.loopConfs(np): _*) {
     val n = nodes.toDF("id")
     val e0 = edges.toDF("a", "b")
     // cache the symmetrized edges PRE-PARTITIONED on b, the per-round
@@ -345,14 +325,6 @@ object Dedup {
     }
     e.unpersist()
     labels.withColumnRenamed("label", "component")
-    } finally {
-      ccPrev match {
-        case Some(v) => spark.conf.set(ccKey, v)
-        case None    => spark.conf.unset(ccKey)
-      }
-      spark.conf.set(aqeKey, aqeWas)
-      spark.conf.set(spKey, spWas)
-      spark.conf.set(abKey, abWas)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.engine.Ck.Ops
+import graft.engine.Engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -246,21 +247,11 @@ object Graph {
     // 1-2 cores; a user-pinned count it keeps
     val np = if (parts > 0) parts
              else edgesIn.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // loop discipline (the hitsInt/connectedComponents contract): AQE off
-    // for the loop — stage-at-a-time scheduling otherwise turns the ~3
-    // stages of every checkpoint cadence into separate scheduler jobs
-    // (measured 28 → 8 jobs on g1_pagerank at identical results);
-    // broadcasts off so no per-round build jobs; parallelism already
-    // pinned to np everywhere. Restored in the finally.
-    val spark0 = edgesIn.sparkSession
-    val aqeWas = spark0.conf.get("spark.sql.adaptive.enabled", "true")
-    val spWas = spark0.conf.get("spark.sql.shuffle.partitions")
-    val abWas = spark0.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark0.conf.set("spark.sql.adaptive.enabled", "false")
-    spark0.conf.set("spark.sql.shuffle.partitions", np.toString)
-    spark0.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // loop pins (Iterate.loopConfs): with AQE on, the ~3 stages of every
+    // checkpoint cadence run as separate scheduler jobs (measured 28 → 8
+    // jobs on g1_pagerank at identical results)
     val lazyCps = scala.collection.mutable.Buffer.empty[DataFrame]
-    try {
+    try Engine.withConfs(edgesIn.sparkSession)(Iterate.loopConfs(np): _*) {
     // assumeDistinct (the hitsInt contract): a caller whose edge frame is
     // provably duplicate-free (e.g. the union of two DISTINCT
     // orientations over disjoint key spaces) skips the dedup — a full
@@ -353,13 +344,8 @@ object Graph {
         ranks
       } finally nodes.unpersist(blocking = false)
     } finally edges.unpersist(blocking = false)
-    } finally {
-      spark0.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark0.conf.set("spark.sql.shuffle.partitions", spWas)
-      spark0.conf.set("spark.sql.autoBroadcastJoinThreshold", abWas)
-      lazyCps.foreach(df => checkpointRdd(df)
-        .foreach(_.unpersist(blocking = false)))
-    }
+    } finally lazyCps.foreach(df => checkpointRdd(df)
+      .foreach(_.unpersist(blocking = false)))
   }
   /** HITS hubs & authorities (Kleinberg) over a DIRECTED bipartite edge
     * list, in INTEGER arithmetic with per-round max-normalization so
@@ -413,35 +399,19 @@ object Graph {
     val spark = edgesIn.sparkSession
     val np = if (parts > 0) parts
              else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // AQE off for the duration of the loop: the iterative plans here are
-    // all small pinned-partitioning stages, and AQE's stage-at-a-time
-    // scheduling turns each of them into its own scheduler job — measured
-    // 40 jobs (5.2 s of local job floor) with AQE vs ~12 without, with
-    // zero partitioning benefit since every exchange is already pinned to
-    // np. Restored in the finally; queries run sequentially per session.
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // the per-round groupBy exchanges must land on the SAME partition
-    // count as the edge caches or the co-location breaks — pin the
-    // session shuffle parallelism to np for the loop's duration
-    val sp = "spark.sql.shuffle.partitions"
-    val spWas = spark.conf.get(sp)
-    spark.conf.set(sp, np.toString)
-    // broadcasts off: the per-half-round 1-row max would otherwise plan
-    // as BroadcastNestedLoopJoin, whose build is its own scheduler job
-    // (6 of them at 3 rounds); as a cartesian with a 1-row side it rides
-    // the main job's stages instead
-    val ab = "spark.sql.autoBroadcastJoinThreshold"
-    val abWas = spark.conf.get(ab)
-    spark.conf.set(ab, "-1")
-    // the try opens IMMEDIATELY after the conf sets (ADVICE r6): an
-    // analysis error in the edge setup below must not leak disabled
-    // AQE/broadcast state into the rest of the session (the edge caches
-    // are pre-declared so the finally can release them)
+    // loop pins (Iterate.loopConfs): with AQE on, each small pinned stage
+    // ran as its own scheduler job — measured 40 jobs (5.2 s of local
+    // job floor) vs ~12 without. The per-round groupBy exchanges must
+    // land on the SAME partition count as the edge caches or the
+    // co-location breaks. With broadcasts off, the per-half-round 1-row
+    // max plans as a cartesian with a 1-row side that rides the main
+    // job's stages, not as a BroadcastNestedLoopJoin whose build is its
+    // own job (6 of them at 3 rounds). The edge caches are pre-declared
+    // so the finally can release them.
     var eBySrc: DataFrame = null
     var eByDst: DataFrame = null
     val cps = scala.collection.mutable.Buffer.empty[DataFrame]
-    try {
+    try Engine.withConfs(spark)(Iterate.loopConfs(np): _*) {
     val e0 = edgesIn.toDF("src", "dst")
     val ed = if (assumeDistinct) e0 else e0.distinct()
     // TWO cached copies of the edge list, hash-partitioned on src and on
@@ -558,9 +528,6 @@ object Graph {
         .unionByName(scores(authRaw, authMx, "authority"))
         .ckpt(true)
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set(sp, spWas)
-      spark.conf.set(ab, abWas)
       // checkpoint blocks live on the backing RDD, not the CacheManager —
       // Dataset.unpersist can't see them (Iterate.checkpointRdd rationale)
       cps.foreach(df => Iterate.checkpointRdd(df)

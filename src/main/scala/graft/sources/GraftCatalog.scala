@@ -109,7 +109,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val spark = SparkSession.active
     // events has shipped TIMESTAMP(NANOS) in some fixture generations:
     // nanosAsLong lets inference map that to LongType instead of throwing,
-    // and is a no-op for µs files; every other table infers as-is
+    // and is a no-op for µs files; every other table infers as-is. Left
+    // set, not scoped: the returned table is scanned later, with this conf
     if (ident.name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = new java.io.File(new java.io.File(root, ident.namespace.head),

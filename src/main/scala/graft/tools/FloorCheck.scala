@@ -3,15 +3,17 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.engine.Engine
+
 /** Floor-off parity ratchet (VERDICT r7 task 4): every graded query must
   * return IDENTICAL rows whether the fixture-scale scheduling-floor confs
-  * (AQE off, 8-partition shuffles — see Engine.fixtureFloorConfs) are
+  * (AQE off, 6-partition shuffles — see Engine.fixtureFloorConfs) are
   * applied or not. The judge proved this invariant holds by re-running the
   * whole Verify → DuckDB pipeline with `spark.graft.floorScope=false`;
   * this main pins it as a first-class check that runs both modes in ONE
   * JVM (shared table cache, no double startup) and exact-compares
   * canonicalized rows — so no query can ever come to DEPEND on the
-  * AQE-off/8-partition semantics without this going red.
+  * AQE-off/6-partition semantics without this going red.
   *
   * Usage: `sbt "runMain graft.tools.FloorCheck [sfDir] [name,name,...]"`
   * — defaults to the full inventory at sf0.001. Exit 1 on any mismatch.
@@ -43,21 +45,21 @@ object FloorCheck {
     * sorted (the check.py discipline — most queries end in orderBy, but
     * physical collect order of unordered ones is not part of the
     * contract). Leaked per-query persisted blocks are released, mirroring
-    * Bench/Verify.
+    * Bench/Verify. The mode's confs are scoped to the run.
     */
   def canonicalRows(spark: SparkSession, sfDir: String, name: String,
-                    floorOn: Boolean): Seq[String] = {
-    if (floorOn) {
-      // apply floor-on via the REAL conf-set entry point (ADVICE r8): a
-      // hardcoded copy here could drift from what Bench/Verify actually
-      // apply if the floor conf set or its size gate ever changes
-      spark.conf.set("spark.graft.floorScope", "true")
-      graft.engine.Engine.fixtureFloorConfs(spark, sfDir)
-    } else {
-      spark.conf.set("spark.graft.floorScope", "false")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-    }
+                    floorOn: Boolean): Seq[String] =
+    if (floorOn) Engine.withConfs(spark)("spark.graft.floorScope" -> "true") {
+      // floor-on via the confs Bench/Verify actually apply (ADVICE r8): a
+      // hardcoded copy here could drift if the floor conf set or its
+      // size gate ever changes
+      Engine.withConfs(spark)(Engine.floorConfs(spark, sfDir): _*)(
+        rows(spark, sfDir, name))
+    } else Engine.withConfs(spark)("spark.graft.floorScope" -> "false",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.shuffle.partitions" -> "32")(rows(spark, sfDir, name))
+
+  private def rows(spark: SparkSession, sfDir: String, name: String): Seq[String] = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val df: DataFrame = graft.SparkEntry.queries(name)(spark, sfDir)
     val ordered = df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
@@ -73,26 +75,14 @@ object FloorCheck {
     * human-readable mismatch description.
     */
   def parity(spark: SparkSession, sfDir: String, name: String): Option[String] = {
-    val floorWas = spark.conf.getOption("spark.graft.floorScope")
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsWere = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      val on = canonicalRows(spark, sfDir, name, floorOn = true)
-      val off = canonicalRows(spark, sfDir, name, floorOn = false)
-      if (on == off) None
-      else if (on.size != off.size)
-        Some(s"row count diverged: floor-on ${on.size}, floor-off ${off.size}")
-      else {
-        val i = on.indices.find(i => on(i) != off(i)).get
-        Some(s"row $i diverged:\n  on : ${on(i)}\n  off: ${off(i)}")
-      }
-    } finally {
-      floorWas match {
-        case Some(v) => spark.conf.set("spark.graft.floorScope", v)
-        case None    => spark.conf.unset("spark.graft.floorScope")
-      }
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", partsWere)
+    val on = canonicalRows(spark, sfDir, name, floorOn = true)
+    val off = canonicalRows(spark, sfDir, name, floorOn = false)
+    if (on == off) None
+    else if (on.size != off.size)
+      Some(s"row count diverged: floor-on ${on.size}, floor-off ${off.size}")
+    else {
+      val i = on.indices.find(i => on(i) != off(i)).get
+      Some(s"row $i diverged:\n  on : ${on(i)}\n  off: ${off(i)}")
     }
   }
 
@@ -117,7 +107,7 @@ object FloorCheck {
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.Engine.persistTables(spark, sfDir)
+    Engine.persistTables(spark, sfDir)
     graft.operators.Graph.warmDerived(spark, sfDir)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))

@@ -4,7 +4,7 @@ import graft.tools.FloorCheck
 
 /** CI-grade slice of the floor-off parity ratchet (VERDICT r7 task 4):
   * the harness mains apply fixture-scale scheduling-floor confs (AQE off,
-  * 8-partition shuffles) for speed, and the invariant that graded VALUES
+  * 6-partition shuffles) for speed, and the invariant that graded VALUES
   * never depend on them is pinned two ways — the full-inventory
   * `tools.FloorCheck` main (run per round alongside Verify), and this
   * always-on spec covering a representative query per at-risk shape:

@@ -2,50 +2,15 @@ package graft
 
 import graft.engine.Engine
 
-/** Engine.floorScoped contract: the scheduling-floor scope must change
-  * WHEN a query's plan executes (AQE off, materialized inside the scope)
-  * without changing WHAT it returns, and both of its gates must hold —
-  * the conf gate for cluster deployments / plan probes, and the
-  * session-conf restore so one scoped query can't leak a disabled AQE
-  * into the rest of the session.
+/** Engine's fixture floor gate: the harness floor confs
+  * (`fixtureFloorConfs`) and the CPU-dense pinned parallelism
+  * (`computeParts`) engage only on a fixture-sized source dir with
+  * `spark.graft.floorScope` not false — production reads keep AQE and the
+  * session's own parallelism.
   */
 class FloorScopeSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
-
-  test("scoped run returns identical rows, in order, to the raw fn") {
-    for (name <- Seq("stat_theil_sen", "f7_fractional_odds")) {
-      val raw = Queries.byName(name).fn(spark, sf).collect().toSeq
-      val scoped = Engine.floorScoped(spark, sf)(
-        Queries.byName(name).fn(spark, sf)).collect().toSeq
-      assert(scoped == raw, s"$name: scoped result diverged from raw fn")
-    }
-  }
-
-  test("scoped frame is materialized; session confs are restored") {
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    val df = Engine.floorScoped(spark, sf)(
-      Queries.byName("f9_numeric_coerce").fn(spark, sf))
-    // inside the scope the frame was eagerly checkpointed — its executed
-    // plan is a checkpoint scan, not the query's own operators
-    assert(df.queryExecution.executedPlan.toString.contains("ExistingRDD"),
-      "scoped query escaped un-materialized")
-    assert(spark.conf.get("spark.sql.adaptive.enabled", "true") == aqeBefore,
-      "floorScoped leaked its AQE setting into the session")
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == partsBefore,
-      "floorScoped leaked its shuffle-partition setting into the session")
-  }
-
-  test("conf gate: floorScope=false hands back the raw lazy plan") {
-    spark.conf.set("spark.graft.floorScope", "false")
-    try {
-      val df = Engine.floorScoped(spark, sf)(
-        Queries.byName("f9_numeric_coerce").fn(spark, sf))
-      assert(!df.queryExecution.executedPlan.toString.contains("ExistingRDD"),
-        "scope engaged despite spark.graft.floorScope=false")
-    } finally spark.conf.unset("spark.graft.floorScope")
-  }
 
   test("fixtureFloorConfs: gated session twin sets, skips, and never fires over-gate") {
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
@@ -54,7 +19,8 @@ class FloorScopeSpec extends SparkSpec {
       // fixture-sized dir: both confs set
       Engine.fixtureFloorConfs(spark, sf)
       assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "6")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") ==
+        Engine.FloorParts.toString)
       // skip set (the SPARK_EXTRA_CONF A/B path): pinned key untouched
       spark.conf.set("spark.sql.shuffle.partitions", "17")
       Engine.fixtureFloorConfs(spark, sf,
@@ -83,16 +49,16 @@ class FloorScopeSpec extends SparkSpec {
     try {
       big.setLength(2L << 30)
       big.close()
-      val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      var bodyRanWithAqe: String = null
-      val out = Engine.floorScoped(spark, dir.toString) {
-        bodyRanWithAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.range(3).toDF("id")
-      }
-      assert(bodyRanWithAqe == before,
-        "scope flipped AQE despite an over-gate source dir")
-      assert(!out.queryExecution.executedPlan.toString.contains("ExistingRDD"),
-        "scope materialized despite an over-gate source dir")
+      val before = spark.conf.getAll
+      Engine.fixtureFloorConfs(spark, dir.toString)
+      assert(spark.conf.getAll == before,
+        "fixtureFloorConfs changed the session despite an over-gate source dir")
+      assert(Engine.computeParts(spark, dir.toString) ==
+        spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        "computeParts did not return the session setting over the gate")
+      // the same gate engages on the fixture dir: the floor-derived count
+      assert(Engine.computeParts(spark, sf) == math.max(Engine.FloorParts,
+        math.min(2 * Engine.FloorParts, spark.sparkContext.defaultParallelism)))
     } finally {
       java.nio.file.Files.deleteIfExists(dir.resolve("huge.parquet"))
       java.nio.file.Files.deleteIfExists(dir)

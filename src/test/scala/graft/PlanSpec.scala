@@ -37,9 +37,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pipe_enrich: all 11+ dimension joins broadcast; no SortMergeJoin") {
-    // the graded query materializes inside its scoped AQE-off block (the
-    // frame it returns is the checkpoint scan), so assert the join
-    // strategy on the engine API over the same parquet-derived shapes
+    // the graded query ends in an eager checkpoint (the frame it returns
+    // is the checkpoint scan), so assert the join strategy on the engine
+    // API over the same parquet-derived shapes
     val n = Engine.table(spark, sf, "nation")
     val day = to_date(lit("2024-01-01")).cast("timestamp")
     val fact = Engine.table(spark, sf, "customer").select(
