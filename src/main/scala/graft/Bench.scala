@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.Engine
 
 /** Benchmark contract: run every inventory query on SPARK_GRAFT_SF_DIR,
   * print ONE JSON line {"metric","value","unit","queries","sf"}.
@@ -14,76 +14,25 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // dev knob (mirrors TimeQ): SPARK_EXTRA_CONF="k=v;k=v" for A/B runs
-    val extra = graft.engine.Engine.harnessExtraConfs("bench")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-first AQE coalescing (see Engine.session); the 8m advisory is
-      // local[32]-at-sf0.1 tuning — sub-8m shuffles collapse to one task,
-      // cutting per-stage scheduling floor. On a cluster leave the 64m
-      // default: the same conf then yields normal production partitioning.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // whole-stage-codegen class cache sized for a multi-query session
-      // (round 11, VERDICT r10 task 2): the default 100-entry LRU is
-      // evicted by any plan-heavy query, so in a 365-query session every
-      // query re-Janino-compiles all its generated stages on every pass
-      // (~1s on the hot whole-frame-window queries — the whole measured
-      // "bench-context inflation"; tools/AltProbe bisected it, and
-      // 10000 entries restored isolated-best times with other queries
-      // interleaved). JVM-static: must be set at builder time.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    extra.foreach { case (k, v) => spark.conf.set(k, v) }
-    val extraKeys = extra.map(_._1).toSet
-    // fixture-scale scheduling-floor confs (size- and conf-gated; see
-    // Engine.fixtureFloorConfs) — A/B overrides above take precedence
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir, extraKeys)
-    // GRADED runs measure REAL streaming execution (round 11, VERDICT r10
-    // + ADVICE r10): with the session-scoped result memo on, pass 2+ of
-    // each streaming query reads its memoized sink — best-of-N would then
-    // grade parquet readback, not Structured Streaming. Off here (unless
-    // explicitly A/B-overridden); interactive sessions keep the memo.
-    if (!extraKeys.contains("spark.graft.streamResultMemo"))
-      spark.conf.set("spark.graft.streamResultMemo", "false")
-    // ERROR, not WARN: the driver keeps only a bounded TAIL of this run's
-    // output and parses the JSON contract line out of it — stray WARNs
-    // (e.g. WindowExec partition warnings) between the line and EOF eat
-    // the window (observed consuming ~900 chars of round 4's artifact)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session(sfDir)
 
-    def run(name: String): Double = {
-      // Iterative queries localCheckpoint their FINAL frame, whose blocks
-      // outlive the query (the loop frees only intermediate rounds).
-      // Across two passes of the full inventory those leaked blocks add
-      // up to real executor-memory pressure — observed as the iterative
-      // queries running 3× slower inside a full bench than in isolation.
-      // Snapshot the persistent-RDD set (the persistTables cache) before
-      // each query and release whatever the query left behind.
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+    // a failed query is reported and timed as -1; Engine.releasing frees
+    // the blocks it left persisted either way
+    def run(name: String): Double = Engine.releasing(spark) {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
+      try {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before.contains(id) }
-        .foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
-      dt
     }
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     // one shared scan per table for the whole query inventory (schema
     // cache + in-memory persist); populated before timing starts
-    graft.engine.Engine.persistTables(spark, sfDir)
+    Engine.persistTables(spark, sfDir)
     // shared derived frames (trade edges + co-purchase backbone) warm
     // BEFORE the first per-query block snapshot, so run()'s leak cleanup
     // never frees them mid-inventory
@@ -159,7 +108,7 @@ object Bench {
     } catch { case _: Throwable => "" }
     val provenance =
       s""""run":"$runName"""" +
-        s""","cpus":$cpus,"host_procs":${Runtime.getRuntime.availableProcessors()}""" +
+        s""","cpus":${Engine.harnessCpus},"host_procs":${Runtime.getRuntime.availableProcessors()}""" +
         duckStamp
     val detailLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$provenance,"n_queries":${results.size},"queries":$detail,"sf":"$sfDir"}"""

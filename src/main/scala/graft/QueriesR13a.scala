@@ -715,7 +715,7 @@ object QueriesR13a {
       "makes the fixed-point color transform exact, block-constant " +
       "pixels are DC-only so the integer-DCT error terms are zero, and " +
       "q=1.0 quant tables are all ones (Multimodal.encodeJpegGray " +
-      "doc; tools/JpegProbe measured maxDiff=0) — so the oracle " +
+      "doc; measured maxDiff=0) — so the oracle " +
       "replays the block formula in SQL and the hash-compare grades " +
       "the real encoder→decoder loop. Map-only at any scale (the " +
       "mm_decode_px shape).",

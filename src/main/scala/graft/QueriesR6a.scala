@@ -298,7 +298,7 @@ object QueriesR6a {
       ConstraintKey -> "false") ++
     // nio checkpoint manager for the per-run LOCAL scratch checkpoints
     // (round 11): the default FileContext manager costs ~45 ms per
-    // atomic write (tools/CkptBench — identical on tmpfs, i.e. pure
+    // atomic write (identical on tmpfs, i.e. pure
     // abstraction overhead, not IO), and a stream run pays 4 WAL writes
     // plus 2 delta writes PER STATE STORE (the interval joins hold 8
     // stores → ~20 writes ≈ 0.9 s of scaffold). Local mode only: on a

@@ -16,43 +16,93 @@ import org.apache.spark.sql.functions._
   */
 object Engine {
 
-  def session(appName: String = "graft",
-              master: String = s"local[${Runtime.getRuntime.availableProcessors()}]"): SparkSession = {
-    // shuffle parallelism derives from the SAME core count as the default
-    // master, so the "pinned to core count" invariant holds on any host
-    // (a hard-coded literal silently over/under-partitions elsewhere)
-    val cores = Runtime.getRuntime.availableProcessors()
+  /** The one SparkSession factory, for Bench, Verify and every dev tool
+    * under `graft.tools`:
+    *   - `local[$SPARK_GRAFT_CPUS]` (default: every core), with shuffle
+    *     parallelism pinned to the same count, AQE on, UTC, UI off;
+    *   - then `confs`, then the `SPARK_EXTRA_CONF` entries (A/B
+    *     overrides), all at builder time so static keys work too; a
+    *     refused `SPARK_EXTRA_CONF` key exits 2 before the session starts;
+    *   - then [[fixtureFloorConfs]] and `spark.graft.streamResultMemo=
+    *     false`, each skipping a key that `confs` or `SPARK_EXTRA_CONF`
+    *     pinned.
+    * perfbench's `Session.build` mirrors these builder confs.
+    */
+  def session(sfDir: String, confs: (String, String)*): SparkSession = {
+    val extra = harnessExtraConfs()
+    val cpus = harnessCpus.toString
     val b = SparkSession.builder()
-      .appName(appName)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // coalesce small post-shuffle partitions to the advisory SIZE rather
-      // than padding out to max parallelism (the prod-recommended setting):
-      // a reduce stage over a few MB collapses to a couple of tasks instead
-      // of 32 near-empty ones — measured 15-30% off every iterative query
-      // locally, and at cluster scale it's exactly how AQE is meant to run
+      // than padding out to max parallelism: a reduce stage over a few MB
+      // collapses to a couple of tasks instead of one per core (measured
+      // 15-30% off every iterative query locally). The 8m advisory is
+      // local[32]-at-sf0.1 tuning (sub-8m shuffles collapse to one task,
+      // cutting per-stage scheduling floor); on a cluster leave the 64m
+      // default, and the same conf yields production partitioning.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // whole-stage-codegen class cache sized for a MULTI-QUERY session
-      // (round 11): the default 100-entry LRU is evicted by any
-      // plan-heavy query, after which every other query re-Janino-
-      // compiles all its generated stages on next execution (~1 s per
-      // affected query — bisected with tools/AltProbe). Any analytics
-      // session running a mixed workload wants this; the cache holds
-      // weak-referenced generated classes, so the cost is bounded and
-      // reclaimed under memory pressure. JVM-static: set at builder time.
+      // whole-stage-codegen class cache sized for a multi-query session
+      // (round 11): the default 100-entry LRU is evicted by any plan-heavy
+      // query, after which every other query re-Janino-compiles all its
+      // generated stages on its next execution (~1 s per affected query,
+      // the whole measured "bench-context inflation"; 10000 entries
+      // restored isolated-best times with other queries interleaved). The
+      // cache holds weak-referenced generated classes, so the cost is
+      // bounded. JVM-static: must be set at builder time.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // parquet predicate pushdown + vectorized reader are defaults, but we
-      // pin them: the oracle-graded queries rely on scans staying columnar.
-      .config("spark.sql.parquet.filterPushdown", "true")
-    // honor an existing session's master (e.g. driver-created) if any
-    val withMaster = if (SparkSession.getActiveSession.isDefined) b else b.master(master)
-    val spark = withMaster.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val pinned = confs ++ extra
+    pinned.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    val pinnedKeys = pinned.map(_._1).toSet
+    fixtureFloorConfs(spark, sfDir, pinnedKeys)
+    // harness runs measure REAL streaming execution (round 11): with the
+    // session-scoped result memo on, a repeat of a streaming query reads
+    // its memoized sink, so best-of-N would time parquet readback, not
+    // Structured Streaming. Library sessions keep the memo.
+    if (!pinnedKeys.contains("spark.graft.streamResultMemo"))
+      spark.conf.set("spark.graft.streamResultMemo", "false")
+    // ERROR, not WARN: Bench's JSON contract line is parsed out of a
+    // bounded TAIL of its output; stray WARNs (e.g. WindowExec partition
+    // warnings) between the line and EOF eat the window (observed
+    // consuming ~900 chars of round 4's artifact)
+    spark.sparkContext.setLogLevel("ERROR")
     spark
+  }
+
+  /** Local cores of a [[session]]: `SPARK_GRAFT_CPUS`, else every core. */
+  def harnessCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Runs `body` and, in `finally`, unpersists every RDD that `body` left
+    * persisted; RDDs persisted before it (the [[persistTables]] cache, the
+    * warmed derived frames) stay. Iterative queries localCheckpoint their
+    * FINAL frame, whose blocks outlive the query; across a full inventory
+    * those leaked blocks add up to real executor-memory pressure (observed
+    * as the iterative queries running 3x slower inside a full bench than
+    * in isolation), so every per-query harness step runs inside this.
+    */
+  def releasing[T](s: SparkSession)(body: => T): T = {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally s.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before.contains(id)) rdd.unpersist(blocking = false)
+    }
+  }
+
+  /** Blocks until every listener event posted so far has been delivered.
+    * The scheduler posts a job's stage and job events before the action
+    * returns, so after an action this makes listener counters exact. The
+    * listener bus is `private[spark]`, hence the reflection.
+    */
+  def drainListeners(s: SparkSession): Unit = {
+    val sc = s.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
   }
 
   /** Canonical testdata tables (TESTDATA.md). */
@@ -123,8 +173,8 @@ object Engine {
   private val schemaCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), org.apache.spark.sql.types.StructType]
 
-  /** `SPARK_EXTRA_CONF="k=v;k=v"` as the harness mains (Bench, Verify,
-    * TimeQ, tools.TimeQuery, tools.StreamProf) read it: malformed entries
+  /** `SPARK_EXTRA_CONF="k=v;k=v"` as every [[session]] reads it (Bench,
+    * Verify and the `graft.tools` mains): malformed entries
     * are reported on stderr and skipped. [[Ck.BypassKey]] is refused with
     * an IllegalArgumentException: it switches every checkpoint off, which
     * measures or grades a different engine (Pipeline's outputs, for one,
@@ -145,11 +195,11 @@ object Engine {
     kvs
   }
 
-  /** [[extraConfs]] of the process environment for a harness `main`:
-    * a refused key exits the JVM with status 2 before any session starts.
+  /** [[extraConfs]] of the process environment for [[session]]: a
+    * refused key exits the JVM with status 2 before the session starts.
     */
-  def harnessExtraConfs(tag: String): Seq[(String, String)] =
-    try extraConfs(sys.env.get("SPARK_EXTRA_CONF"), tag)
+  private def harnessExtraConfs(): Seq[(String, String)] =
+    try extraConfs(sys.env.get("SPARK_EXTRA_CONF"), "graft")
     catch { case e: IllegalArgumentException =>
       System.err.println(e.getMessage.stripPrefix("requirement failed: "))
       sys.exit(2)
@@ -214,10 +264,11 @@ object Engine {
       "spark.sql.shuffle.partitions" -> FloorParts.toString,
       "spark.sql.inMemoryColumnarStorage.compressed" -> "false")
 
-  /** Applies [[floorConfs]] ONCE per session for the harness mains (Bench
-    * / Verify / TimeQ). Executed plans stay exactly what a user running
-    * those session confs would get. `skip` lets a harness exempt keys its
-    * caller already pinned (e.g. SPARK_EXTRA_CONF A/B overrides).
+  /** Applies [[floorConfs]] ONCE per session: [[session]] calls it for
+    * every harness main, perfbench for its own session. Executed plans
+    * stay exactly what a user running those session confs would get.
+    * `skip` lets a harness exempt keys its caller already pinned (e.g.
+    * SPARK_EXTRA_CONF A/B overrides).
     */
   def fixtureFloorConfs(s: SparkSession, sfDir: String,
                         skip: Set[String] = Set.empty): Unit =

@@ -80,7 +80,7 @@ object Graph {
   // localCheckpoint) keeps the LINEAGE: the Bench/Verify per-query
   // leak-cleanup unpersists blocks a query leaves behind, and a
   // checkpoint-truncated frame would be unrecoverable after that — a
-  // cached frame just recomputes. Bench/Verify/TimeQ call [[warmDerived]]
+  // cached frame just recomputes. Bench/Verify/TimeQuery call [[warmDerived]]
   // BEFORE their first per-query block snapshot, so the blocks land in
   // every query's `before` set and are never cleaned up mid-run.
 

@@ -360,7 +360,7 @@ object Multimodal {
     *  - quality 1.0 scales the quantization tables to all-ones, so the
     *    DC coefficient survives quantization unchanged.
     *
-    * Verified exact over the id range by tools/JpegProbe (maxDiff=0)
+    * Verified exact over the id range (maxDiff=0)
     * and pinned by JpegDecodeSpec; images whose pixels vary WITHIN a
     * block would NOT round-trip and must use the PNG path.
     */

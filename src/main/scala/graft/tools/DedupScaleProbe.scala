@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Growth-rate evidence for the documents-tier asymptotics claims: the
@@ -30,16 +29,8 @@ object DedupScaleProbe {
       else "dedup_minhash_lsh,dedup_prefix_filter,dedup_components," +
         "dedup_simhash,text_tfidf_top")
       .split(",").toSeq
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
     val base = "/root/testdata/sf0.1"
+    val spark = graft.engine.Engine.session(base)
 
     def scaledDir(mult: Int): String = {
       val dir = java.nio.file.Files
@@ -66,14 +57,11 @@ object DedupScaleProbe {
 
     def time(name: String, d: String): Double = {
       val fn = graft.Queries.byName(name).fn
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      fn(spark, d).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before.contains(id) }
-        .foreach { case (_, r) => r.unpersist(blocking = false) }
-      dt
+      graft.engine.Engine.releasing(spark) {
+        val t0 = System.nanoTime()
+        fn(spark, d).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
     }
 
     val dirs = mults.map(m => m -> scaledDir(m)).toMap

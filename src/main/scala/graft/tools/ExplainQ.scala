@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
+
+import graft.engine.{Ck, Engine}
 
 /** Dev utility: print a graded query's executed plan under bench-like
   * confs (floor scope off so the query's own shape shows, AQE off so
@@ -18,19 +19,11 @@ object ExplainQ {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val outDir = if (args.length > 3) Some((args(2), args(3))) else None
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.graft.floorScope", "false")
-    // full lineage in the explain output: checkpoints otherwise truncate
-    // every ckpt-bearing query's plan to a LogicalRDD stub (see Ck.cp)
-    spark.conf.set(graft.engine.Ck.BypassKey, "true")
+    val spark = Engine.session(sfDir,
+      "spark.graft.floorScope" -> "false", "spark.sql.adaptive.enabled" -> "false",
+      // full lineage in the explain output: checkpoints otherwise truncate
+      // every ckpt-bearing query's plan to a LogicalRDD stub (see Ck.cp)
+      Ck.BypassKey -> "true")
     names.foreach { n =>
       println(s"===== $n =====")
       val df = graft.Queries.byName(n).fn(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run named inventory queries in a session with
   * GraftExtensions INSTALLED (FuseArrayDot active), to prove the engine's
   * own queries survive the optimizer rule — esp. derived-key self-joins
@@ -11,23 +9,8 @@ object ExtCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // whole-stage-codegen class cache sized for a multi-query session
-      // (round 11, VERDICT r10 task 2): the default 100-entry LRU is
-      // evicted by any plan-heavy query, so in a 365-query session every
-      // query re-Janino-compiles all its generated stages on every pass
-      // (~1s on the hot whole-frame-window queries — the whole measured
-      // "bench-context inflation"; tools/AltProbe bisected it, and
-      // 10000 entries restored isolated-best times with other queries
-      // interleaved). JVM-static: must be set at builder time.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Engine.session(sfDir,
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions")
     names.foreach { name =>
       try {
         val n = graft.SparkEntry.queries(name)(spark, sfDir).count()

@@ -59,17 +59,12 @@ object FloorCheck {
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.shuffle.partitions" -> "32")(rows(spark, sfDir, name))
 
-  private def rows(spark: SparkSession, sfDir: String, name: String): Seq[String] = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df: DataFrame = graft.SparkEntry.queries(name)(spark, sfDir)
-    val ordered = df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
-    val rows = ordered.collect()
-      .map(r => r.toSeq.map(renderCell).mkString("|")).toSeq.sorted
-    spark.sparkContext.getPersistentRDDs
-      .filterNot { case (id, _) => before.contains(id) }
-      .foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
-    rows
-  }
+  private def rows(spark: SparkSession, sfDir: String, name: String): Seq[String] =
+    Engine.releasing(spark) {
+      val df: DataFrame = graft.SparkEntry.queries(name)(spark, sfDir)
+      val ordered = df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
+      ordered.collect().map(r => r.toSeq.map(renderCell).mkString("|")).toSeq.sorted
+    }
 
   /** Compare floor-on vs floor-off for one query; None = parity, Some =
     * human-readable mismatch description.
@@ -90,23 +85,8 @@ object FloorCheck {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // whole-stage-codegen class cache sized for a multi-query session
-      // (round 11, VERDICT r10 task 2): the default 100-entry LRU is
-      // evicted by any plan-heavy query, so in a 365-query session every
-      // query re-Janino-compiles all its generated stages on every pass
-      // (~1s on the hot whole-frame-window queries — the whole measured
-      // "bench-context inflation"; tools/AltProbe bisected it, and
-      // 10000 entries restored isolated-best times with other queries
-      // interleaved). JVM-static: must be set at builder time.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // floor off at session level: each mode sets its own confs
+    val spark = Engine.session(sfDir, "spark.graft.floorScope" -> "false")
     Engine.persistTables(spark, sfDir)
     graft.operators.Graph.warmDerived(spark, sfDir)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted

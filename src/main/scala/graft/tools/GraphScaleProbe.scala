@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Growth-rate evidence for the events/graph tier: the iterative graph
@@ -24,18 +23,8 @@ object GraphScaleProbe {
     val names = (if (args.length > 1) args(1)
       else "g1_pagerank,g7_hits,g6_kcore,g8_label_prop,a7_window_hourly")
       .split(",").toSeq
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // streaming shapes must re-execute per pass, not read their memo
-      .config("spark.graft.streamResultMemo", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
     val base = "/root/testdata/sf0.1"
+    val spark = graft.engine.Engine.session(base)
 
     def scaledDir(mult: Int): String = {
       val dir = java.nio.file.Files
@@ -61,14 +50,11 @@ object GraphScaleProbe {
 
     def time(name: String, d: String): Double = {
       val fn = graft.Queries.byName(name).fn
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      fn(spark, d).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before.contains(id) }
-        .foreach { case (_, r) => r.unpersist(blocking = false) }
-      dt
+      graft.engine.Engine.releasing(spark) {
+        val t0 = System.nanoTime()
+        fn(spark, d).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
     }
 
     val dirs = mults.map(m => m -> scaledDir(m)).toMap

@@ -1,7 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+
+import graft.engine.Engine
 
 /** Prints every Spark job a graded query triggers (description + stage
   * count) — the attribution step behind job-floor work: at ~0.2 s local
@@ -14,17 +15,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.graft.streamResultMemo", "false")
-      .getOrCreate()
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session(sfDir)
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -44,7 +35,7 @@ object JobProbe {
       jobs.clear()
       graft.SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      Thread.sleep(300) // let listener events drain
+      Engine.drainListeners(spark)
       println(s"=== $n")
       jobs.forEach(j => println("  " + j))
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -23,16 +23,8 @@ object KnnScaleProbe {
   def main(args: Array[String]): Unit = {
     val mults = (if (args.nonEmpty) args(0) else "1,5,10")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
     val base = "/root/testdata/sf0.1"
+    val spark = graft.engine.Engine.session(base)
 
     def scaledDir(mult: Int): String = {
       val dir = java.nio.file.Files

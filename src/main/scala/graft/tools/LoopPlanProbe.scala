@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: reconstruct ONE pageRankInt round (the graded g1 shape,
@@ -11,16 +10,7 @@ import org.apache.spark.sql.functions._
 object LoopPlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.Engine.session(sfDir)
     graft.engine.Engine.persistTables(spark, sfDir)
     graft.operators.Graph.warmDerived(spark, sfDir)
     import org.apache.spark.sql.expressions.Window

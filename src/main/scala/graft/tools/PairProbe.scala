@@ -1,12 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.Engine
 
 /** Generic paired within-JVM A/B over a session conf (round 11). Host
   * wall-clock drifts ±25% between JVMs (SURVEY §8 probe data), so any
-  * lever worth <30% must be judged by alternating the two settings
-  * inside ONE session and comparing per-iteration pairs — the DragProbe
-  * methodology generalized to an arbitrary conf.
+  * lever worth <30% must be judged by alternating the two settings of
+  * one conf inside ONE session and comparing per-iteration pairs.
   *
   * Usage: runMain graft.tools.PairProbe <sfDir> <q1,q2,...> \
   *          <confKey=valA|valB> [iters=6]
@@ -20,42 +19,16 @@ object PairProbe {
     val Array(confKey, vals) = args(2).split("=", 2)
     val Array(valA, valB) = vals.split("\\|", 2)
     val iters = if (args.length > 3) args(3).toInt else 6
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // whole-stage-codegen class cache sized for a multi-query session
-      // (round 11, VERDICT r10 task 2): the default 100-entry LRU is
-      // evicted by any plan-heavy query, so in a 365-query session every
-      // query re-Janino-compiles all its generated stages on every pass
-      // (~1s on the hot whole-frame-window queries — the whole measured
-      // "bench-context inflation"; tools/AltProbe bisected it, and
-      // 10000 entries restored isolated-best times with other queries
-      // interleaved). JVM-static: must be set at builder time.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.graft.streamResultMemo", "false")
-      .getOrCreate()
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session(sfDir)
 
-    def run(name: String): Double = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+    def run(name: String): Double = Engine.releasing(spark) {
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before.contains(id) }
-        .foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
-      dt
+      (System.nanoTime() - t0) / 1e9
     }
 
-    graft.engine.Engine.persistTables(spark, sfDir)
+    Engine.persistTables(spark, sfDir)
     names.foreach(run) // warm the code paths once (JIT, codegen cache)
 
     // per query, per iteration: (timeA, timeB) pairs

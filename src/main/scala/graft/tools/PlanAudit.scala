@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: per-query exchange census — hash/range/broadcast counts
   * in the executed plan, the numbers every "N shuffles" doc claim in the
   * inventory should be checked against.
@@ -13,22 +11,7 @@ object PlanAudit {
     val names =
       if (args.length < 2 || args(1) == "all") graft.Queries.all.map(_.name)
       else args(1).split(",").toSeq
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // whole-stage-codegen class cache sized for a multi-query session
-      // (round 11, VERDICT r10 task 2): the default 100-entry LRU is
-      // evicted by any plan-heavy query, so in a 365-query session every
-      // query re-Janino-compiles all its generated stages on every pass
-      // (~1s on the hot whole-frame-window queries — the whole measured
-      // "bench-context inflation"; tools/AltProbe bisected it, and
-      // 10000 entries restored isolated-best times with other queries
-      // interleaved). JVM-static: must be set at builder time.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.Engine.session(sfDir)
     names.foreach { name =>
       try {
         val df = graft.SparkEntry.queries(name)(spark, sfDir)

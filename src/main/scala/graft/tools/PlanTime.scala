@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: split a graded query's wall into driver-side phases —
   * DataFrame construction (fn), analysis, optimization, physical
   * planning + codegen prep (executedPlan) — vs execution (noop sink).
@@ -16,17 +14,7 @@ object PlanTime {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.graft.streamResultMemo", "false")
-      .getOrCreate()
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.Engine.session(sfDir)
     graft.engine.Engine.persistTables(spark, sfDir)
 
     def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000L

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A/B harness for the graded skew join (j27_skew_salted): times the
@@ -21,14 +20,7 @@ object SkewAB {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir, Set.empty)
+    val spark = graft.engine.Engine.session(sfDir)
 
     def fact = graft.engine.Engine.table(spark, sfDir, "events")
       .select(col("event_id"),

@@ -1,7 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+
+import graft.engine.Engine
 
 /** Per-stage attribution for a graded query: prints each completed
   * stage's wall (submission->completion), summed executor run time,
@@ -16,17 +17,7 @@ object StageProf {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.graft.streamResultMemo", "false")
-      .getOrCreate()
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session(sfDir)
     val stages =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, Int, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -47,7 +38,7 @@ object StageProf {
     // graph frames, so profiles show what the graded run executes (a
     // round-13 misread: without this, every profile re-scanned parquet
     // and re-ran the fixture repartition exchanges per rep)
-    graft.engine.Engine.persistTables(spark, sfDir)
+    Engine.persistTables(spark, sfDir)
     graft.operators.Graph.warmDerived(spark, sfDir)
     val fn = graft.Queries.byName(name).fn
     (1 to reps).foreach { r =>
@@ -57,8 +48,7 @@ object StageProf {
       df.write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[stageprof] rep $r%d total $dt%.2fs")
-      // listener events are async; give the bus a beat to drain
-      Thread.sleep(300)
+      Engine.drainListeners(spark)
       stages.toArray(Array.empty[(Int, Long, Long, Int, String)])
         .sortBy(_._1).foreach { case (id, wall, run, nt, nm) =>
           println(f"[stageprof]   stage $id%4d wall ${wall}%5d ms run ${run}%5d ms tasks $nt%3d  $nm")

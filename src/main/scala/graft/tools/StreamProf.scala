@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Streaming-tier cost attribution (VERDICT r9 task 3): run one or more
@@ -16,29 +15,9 @@ object StreamProf {
     val names = if (args.length > 1) args(1).split(",").toSeq
                 else Seq("stream_session_state")
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // whole-stage-codegen class cache sized for a multi-query session
-      // (round 11, VERDICT r10 task 2): the default 100-entry LRU is
-      // evicted by any plan-heavy query, so in a 365-query session every
-      // query re-Janino-compiles all its generated stages on every pass
-      // (~1s on the hot whole-frame-window queries — the whole measured
-      // "bench-context inflation"; tools/AltProbe bisected it, and
-      // 10000 entries restored isolated-best times with other queries
-      // interleaved). JVM-static: must be set at builder time.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // profiling REAL stream executions is this tool's whole purpose —
-      // a memo hit on rep 2+ would measure parquet readback instead
-      .config("spark.graft.streamResultMemo", "false")
-      .getOrCreate()
-    graft.engine.Engine.harnessExtraConfs("streamprof")
-      .foreach { case (k, v) => spark.conf.set(k, v) }
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir)
-    spark.sparkContext.setLogLevel("ERROR")
+    // the session's memo-off default is this tool's whole purpose: a memo
+    // hit on rep 2+ would measure parquet readback, not the stream
+    val spark = graft.engine.Engine.session(sfDir)
 
     val progress = new java.util.concurrent.ConcurrentLinkedQueue[String]
     spark.streams.addListener(new StreamingQueryListener {

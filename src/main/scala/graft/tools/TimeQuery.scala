@@ -3,7 +3,8 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+
+import graft.engine.Engine
 
 /** Dev utility: time named inventory queries under BENCH conditions
   * (noop sink, fixture floor confs, shared table cache, best of N) and
@@ -14,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * more parallelism.
   *
   * Usage: runMain graft.tools.TimeQuery <sfDir> <q1,q2|all> [n]
-  * SPARK_EXTRA_CONF="k=v;k=v" overrides confs for A/B runs (keys passed
-  * are exempted from the floor-conf auto-set, mirroring Bench).
+  * SPARK_EXTRA_CONF="k=v;k=v" overrides confs for A/B runs (see
+  * Engine.session).
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -24,35 +25,7 @@ object TimeQuery {
       if (args(1) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(1).split(",").toSeq
     val n = if (args.length > 2) args(2).toInt else 2
-    val extra = graft.engine.Engine.harnessExtraConfs("timeq")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // whole-stage-codegen class cache sized for a multi-query session
-      // (round 11, VERDICT r10 task 2): the default 100-entry LRU is
-      // evicted by any plan-heavy query, so in a 365-query session every
-      // query re-Janino-compiles all its generated stages on every pass
-      // (~1s on the hot whole-frame-window queries — the whole measured
-      // "bench-context inflation"; tools/AltProbe bisected it, and
-      // 10000 entries restored isolated-best times with other queries
-      // interleaved). JVM-static: must be set at builder time.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    extra.foreach { case (k, v) => spark.conf.set(k, v) }
-    val extraKeys = extra.map(_._1).toSet
-    graft.engine.Engine.fixtureFloorConfs(spark, sfDir, extraKeys)
-    // mirror Bench (round 11): graded/bench conditions measure REAL
-    // streaming execution, not a memoized-sink readback on rep 2+
-    if (!extraKeys.contains("spark.graft.streamResultMemo"))
-      spark.conf.set("spark.graft.streamResultMemo", "false")
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Engine.session(sfDir)
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -66,22 +39,20 @@ object TimeQuery {
       }
     })
 
-    graft.engine.Engine.persistTables(spark, sfDir)
+    Engine.persistTables(spark, sfDir)
     graft.operators.Graph.warmDerived(spark, sfDir)
     names.foreach { name =>
       val runs = (1 to n).map { _ =>
-        val before = spark.sparkContext.getPersistentRDDs.keySet
         jobs.set(0); stages.set(0); tasks.set(0L)
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // listener events are async (the bus is private[spark]); a short
-        // settle keeps the counters honest for a dev tool
-        Thread.sleep(120)
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => before.contains(id) }
-          .foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
+        val dt = Engine.releasing(spark) {
+          val t0 = System.nanoTime()
+          graft.SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
+        // counters are zeroed per run: an event still queued would count
+        // against the next run
+        Engine.drainListeners(spark)
         (dt, jobs.get(), stages.get(), tasks.get())
       }
       val best = runs.minBy(_._1)

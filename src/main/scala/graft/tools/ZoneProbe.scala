@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.ZoneMap
 
 /** Prints the zone-map prune selectivity behind s11/s12 at a given sf:
@@ -14,13 +12,7 @@ import graft.sources.ZoneMap
 object ZoneProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.Engine.session(sfDir)
 
     def us(d: String): Long = java.time.LocalDateTime.parse(d)
       .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L

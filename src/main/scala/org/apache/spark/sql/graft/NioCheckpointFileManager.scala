@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * WHY (round 11): every offset-log, commit-log and state-store-delta
   * write goes through `createAtomic` (write temp → rename), and the
   * default FileContext-based manager costs **~45 ms per write** on a
-  * local path — measured by `tools/CkptBench` at 46.6 ms/write on tmpfs
+  * local path — measured at 46.6 ms/write on tmpfs
   * and 43.3 ms on disk, versus 0.08 ms for the identical bytes via
   * plain nio write+ATOMIC_MOVE. The overhead is pure abstraction (it is
   * identical on tmpfs, so it is not IO). A graded streaming query pays

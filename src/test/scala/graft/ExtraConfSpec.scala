@@ -6,8 +6,9 @@ import graft.engine.{Ck, Engine}
 
 /** The harness mains' `SPARK_EXTRA_CONF` parser: well-formed `k=v`
   * entries pass through, malformed ones are skipped, and the explain-only
-  * checkpoint bypass is refused — in the parser, and as a non-zero exit of
-  * every harness main before any session starts.
+  * checkpoint bypass is refused — in the parser, and as exit status 2 of
+  * the harness mains, all of which build their session with
+  * `Engine.session`, before any session starts.
   */
 class ExtraConfSpec extends AnyFunSuite {
 
@@ -24,13 +25,16 @@ class ExtraConfSpec extends AnyFunSuite {
     assert(e.getMessage.contains("ExplainQ"))
   }
 
-  test("Bench, Verify, TimeQ and TimeQuery exit non-zero when the bypass is set") {
+  test("every harness main exits 2 on the bypass key before a session starts") {
     val java = s"${System.getProperty("java.home")}/bin/java"
     val mains = Seq(
       "graft.Bench" -> Nil,
       "graft.Verify" -> Seq("/nonexistent-sf", "/nonexistent-out"),
-      "graft.TimeQ" -> Seq("/nonexistent-sf", "q1"),
-      "graft.tools.TimeQuery" -> Seq("/nonexistent-sf", "q1"))
+      "graft.tools.TimeQuery" -> Seq("/nonexistent-sf", "q1"),
+      "graft.tools.FloorCheck" -> Seq("/nonexistent-sf"),
+      "graft.tools.StreamProf" -> Seq("/nonexistent-sf"),
+      "graft.tools.ExplainQ" -> Seq("/nonexistent-sf", "q1"),
+      "graft.tools.ExtCheck" -> Seq("/nonexistent-sf", "q1"))
     for ((main, args) <- mains) {
       val pb = new ProcessBuilder(
         (Seq(java, "-cp", System.getProperty("java.class.path"), main) ++ args): _*)

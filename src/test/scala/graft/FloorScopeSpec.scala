@@ -13,14 +13,14 @@ class FloorScopeSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("fixtureFloorConfs: gated session twin sets, skips, and never fires over-gate") {
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsWere = spark.conf.get("spark.sql.shuffle.partitions")
+    val before = spark.conf.getAll
     try {
-      // fixture-sized dir: both confs set
+      // fixture-sized dir: every floor conf set
       Engine.fixtureFloorConfs(spark, sf)
       assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
       assert(spark.conf.get("spark.sql.shuffle.partitions") ==
         Engine.FloorParts.toString)
+      assert(spark.conf.get("spark.sql.inMemoryColumnarStorage.compressed") == "false")
       // skip set (the SPARK_EXTRA_CONF A/B path): pinned key untouched
       spark.conf.set("spark.sql.shuffle.partitions", "17")
       Engine.fixtureFloorConfs(spark, sf,
@@ -34,10 +34,13 @@ class FloorScopeSpec extends SparkSpec {
       assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
         "fixtureFloorConfs fired despite floorScope=false")
     } finally {
-      spark.conf.unset("spark.graft.floorScope")
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", partsWere)
+      // the shared session must leave exactly as it came: every later
+      // suite in this JVM runs on it
+      val after = spark.conf.getAll
+      (after.keySet -- before.keySet).foreach(spark.conf.unset)
+      before.foreach { case (k, v) => if (!after.get(k).contains(v)) spark.conf.set(k, v) }
     }
+    assert(spark.conf.getAll == before, "the test left session confs changed")
   }
 
   test("size gate: a production-sized source dir never engages the scope") {
